@@ -103,6 +103,15 @@ class Sketch:
     # columns row-wise for these instead of concatenating them flat.
     consumes_vectors: ClassVar[bool] = False
 
+    # Whether a task body may count a column's small non-negative ids first
+    # and feed each distinct id once (spark.agg.TaskFeed). "set": the state
+    # depends only on which ids were seen, so update(distinct ids) equals
+    # the raw stream byte for byte. "counts": update(ids, counts=n) equals
+    # feeding each id n times. None: raw stream only — the default, and
+    # required for batch-boundary-dependent kinds. Every declaring kind is
+    # checked against its raw feed in tests/test_preaggregate.py.
+    preaggregate: ClassVar[str | None] = None
+
     # ---- abstract-ish API -------------------------------------------------
     def _params(self) -> dict[str, Any]:
         raise NotImplementedError

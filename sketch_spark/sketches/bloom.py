@@ -84,6 +84,7 @@ class BloomFilter(Sketch):
     # bit positions come from KM double hashing since round 4 — tag the wire
     # state so pre-KM persisted states refuse to load (see base.hash_family)
     hash_family = "km2008"
+    preaggregate = "set"  # OR-monoid bits
 
     def __init__(self, l2sz: int = 20, nh: int = 4, seed: int = 1337):
         if not 6 <= l2sz <= 36:

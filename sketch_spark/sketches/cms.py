@@ -141,6 +141,7 @@ class CountMinSketch(_TableSketch):
     # row indices come from KM double hashing since round 4 — tag the wire
     # state so pre-KM persisted states refuse to load (see base.hash_family)
     hash_family = "km2008"
+    preaggregate = "counts"  # integer bincounts, exact as float64 weights
 
     def epsilon(self) -> float:
         """Overestimate bound factor: ε = e / w."""

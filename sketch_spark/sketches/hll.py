@@ -214,6 +214,7 @@ def ertl_joint(h1: "HyperLogLog", h2: "HyperLogLog") -> tuple[float, float, floa
 @register
 class HyperLogLog(Sketch):
     kind = "hll"
+    preaggregate = "set"  # max-monoid registers
 
     def __init__(self, p: int = 14, seed: int = 0, estimator: str = "ertl"):
         if not 4 <= p <= 24:

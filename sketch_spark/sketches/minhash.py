@@ -37,6 +37,7 @@ _MAX = np.uint64(0xFFFFFFFFFFFFFFFF)
 @register
 class BottomKMinHash(Sketch):
     kind = "minhash"
+    preaggregate = "set"  # bottom-k of the distinct hashes
 
     def __init__(self, k: int = 1024, seed: int = 0):
         if k < 1:

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from sketch_spark.hashing import hash_strings
+from sketch_spark.sketches import base as _base
 from sketch_spark.sketches.base import Sketch, from_bytes, make_sketch
 
 _STATE_SCHEMA = "name string, state binary, n_rows long, n_values long, wall_ms double"
@@ -97,6 +98,89 @@ def _extract_column(batch: pa.RecordBatch, col: str, want_float: bool) -> np.nda
     return _extract_from_array(batch.column(batch.schema.get_field_index(col)), want_float)
 
 
+# Vocabulary pre-aggregation gate (TaskFeed): a unit's ids are bincounted
+# only when all of them lie in [0, DENSE_CAP). The per-column accumulator is
+# sized to the largest id seen, so it stays within DENSE_CAP int64 counters
+# (32 MB) per column per task.
+DENSE_CAP = 1 << 22
+
+
+def _is_dense(vals: np.ndarray) -> bool:
+    return (
+        len(vals) > 0
+        and vals.dtype.kind in "iu"
+        and (vals.dtype.kind == "u" or int(vals.min()) >= 0)
+        and int(vals.max()) < DENSE_CAP
+    )
+
+
+class TaskFeed:
+    """One task's sketch set, fed unit by unit: the single task body of the
+    global builds (DataFrame partitions, streaming micro-batches and
+    parquet-direct units).
+
+    Each unit's columns are extracted once and shared by every spec that
+    reads them. When a unit's ids pass the dense gate, the specs whose kind
+    declares ``Sketch.preaggregate`` do not see them yet: the ids go into
+    one bincount accumulator per column, and :meth:`finish` feeds the
+    distinct ids once per task (with their counts for additive kinds). Every
+    other spec — float/quantile specs, undeclared kinds, units that fail the
+    gate — gets the raw stream in fixed UPDATE_SUPER slices: bounded
+    transients, and the batch-boundary-dependent kinds (pccm/cbf/pcbf/vac/hk)
+    see a slicing that is a pure function of the unit, so re-runs and
+    kill/resume stay byte-identical. Both routes give the same state bytes."""
+
+    def __init__(self, spec_list: list[tuple]):
+        self.sketches = {name: make_sketch(kind, **params) for name, kind, _, params, _ in spec_list}
+        self.n_values = dict.fromkeys(self.sketches, 0)
+        # (col, want_float) -> (pre-aggregating spec names, raw-fed spec names)
+        self._columns: dict[tuple[str, bool], tuple[list[str], list[str]]] = {}
+        for name, _, col, _, want_float in spec_list:
+            pre, raw = self._columns.setdefault((col, want_float), ([], []))
+            eligible = not want_float and self.sketches[name].preaggregate is not None
+            (pre if eligible else raw).append(name)
+        self._counts: dict[tuple[str, bool], np.ndarray] = {}
+
+    def feed(self, unit) -> None:
+        """Absorb one unit (an Arrow Table or RecordBatch)."""
+        for key, (pre, raw) in self._columns.items():
+            col, want_float = key
+            vals = _extract_column(unit, col, want_float)
+            for name in pre + raw:
+                self.n_values[name] += len(vals)
+            direct = pre + raw
+            if pre and _is_dense(vals):
+                self._count(key, vals)
+                direct = raw
+            for name in direct:
+                for s in range(0, len(vals), _base.UPDATE_SUPER):
+                    self.sketches[name].update(vals[s : s + _base.UPDATE_SUPER])
+
+    def _count(self, key: tuple[str, bool], vals: np.ndarray) -> None:
+        # sliced so the intp copy bincount needs stays O(UPDATE_SUPER)
+        acc = self._counts.get(key, np.zeros(0, dtype=np.int64))
+        step = _base.UPDATE_SUPER
+        for s in range(0, len(vals), step):
+            c = np.bincount(vals[s : s + step].astype(np.intp, copy=False))
+            if len(acc) < len(c):
+                acc, c = c, acc
+            acc[: len(c)] += c
+        self._counts[key] = acc
+
+    def finish(self) -> dict[str, Sketch]:
+        """Feed the counted ids and return the sketches."""
+        for key, acc in self._counts.items():
+            ids = np.flatnonzero(acc)
+            for name in self._columns[key][0]:
+                sk = self.sketches[name]
+                if sk.preaggregate == "counts":
+                    sk.update(ids, counts=acc[ids])
+                else:
+                    sk.update(ids)
+        self._counts.clear()
+        return self.sketches
+
+
 def partition_states(df: DataFrame, specs: list[SketchSpec]) -> DataFrame:
     """Partial aggregation: one serialized sketch state per (partition, spec).
 
@@ -108,15 +192,13 @@ def partition_states(df: DataFrame, specs: list[SketchSpec]) -> DataFrame:
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t0 = time.perf_counter()
-        sketches = {name: make_sketch(kind, **params) for name, kind, _, params, _ in spec_list}
+        task = TaskFeed(spec_list)
         n_rows = 0
-        n_values = {name: 0 for name, *_ in spec_list}
         for batch in batches:
             n_rows += batch.num_rows
-            for name, _, col, _, want_float in spec_list:
-                vals = _extract_column(batch, col, want_float)
-                n_values[name] += len(vals)
-                sketches[name].update(vals)
+            task.feed(batch)
+        sketches = task.finish()
+        n_values = task.n_values
         wall_ms = (time.perf_counter() - t0) * 1e3
         yield pa.RecordBatch.from_arrays(
             [

@@ -19,6 +19,22 @@ input size. This is the same execution shape as the reference's MPI job
 with Spark doing the scheduling, retries, and the tree correctly (the
 reference's own tree combine is disabled as buggy, mpiParallelIO.cpp:83-84).
 
+Vocabulary pre-aggregation: the task body feeds one
+:class:`~sketch_spark.spark.agg.TaskFeed` (the DataFrame and streaming
+global builds use the same one). Each column is extracted once per unit.
+When every id of a unit lies in [0, 2^22) (``agg.DENSE_CAP``), the unit is
+added to one ``np.bincount`` accumulator per column, sized to the largest
+id seen — at most 32 MB of int64 per column per task — and at task end the
+distinct ids go once to every spec whose kind declares
+``Sketch.preaggregate``: ``update(ids)`` for the set-determined hll/dhll/
+bloom/minhash, ``update(ids, counts=...)`` for the additive cms. A
+tokenizer vocabulary that repeats 50 k ids millions of times is hashed and
+scattered 50 k times per sketch instead of once per token. Units that fail
+the gate (negative ids, the null sentinel, hashed strings, ids ≥ 2^22),
+float/quantile specs and every other kind — including the
+batch-boundary-dependent pccm/cbf/pcbf/vac/hk — get the raw stream as
+before. Both routes give byte-identical states.
+
 The DataFrame path (`sketch_spark.spark.agg`) remains the general route for
 sketching *derived* DataFrames (post-filter/join/column-expr); this module
 is the fast path for whole-table builds, and the two produce byte-identical
@@ -26,15 +42,15 @@ states (tested)."""
 
 from __future__ import annotations
 
+import itertools
 import os
 from typing import Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import SparkSession
 
-from sketch_spark.sketches import base as _base
 from sketch_spark.sketches.base import Sketch, from_bytes
-from sketch_spark.spark.agg import SketchSpec, _extract_from_array, _keyed_partial, merge_keyed_states
+from sketch_spark.spark.agg import SketchSpec, TaskFeed, _keyed_partial, merge_keyed_states
 
 
 def list_parquet_files(path_or_files: str | list[str]) -> list[str]:
@@ -49,41 +65,35 @@ def list_parquet_files(path_or_files: str | list[str]) -> list[str]:
     )
 
 
+def _read_unit(unit: tuple, cols: list[str]) -> pa.Table:
+    """Read one work unit's columns with single-threaded pyarrow (Spark owns
+    core-level parallelism). A unit is (path, rg_lo, rg_hi): a contiguous
+    row-group range, or the whole file when rg_lo is None."""
+    import pyarrow.parquet as pq
+
+    path, rg_lo, rg_hi = unit
+    if rg_lo is None:
+        return pq.read_table(path, columns=cols, use_threads=False)
+    pf = pq.ParquetFile(path)
+    return pf.read_row_groups(list(range(rg_lo, rg_hi)), columns=cols, use_threads=False)
+
+
 def _build_states_for_units(
     units: Iterable[tuple], spec_list: list[tuple], row_filter=None, extra_columns=()
 ) -> Iterator[dict[str, bytes]]:
-    """Task body: read the needed columns of each work unit with pyarrow
-    (single-threaded — Spark owns core-level parallelism), update one sketch
-    set, emit serialized states. A unit is (path, rg_lo, rg_hi): a
-    contiguous row-group range, or the whole file when rg_lo is None."""
-    import pyarrow.parquet as pq
-
-    from sketch_spark.sketches.base import make_sketch
-
-    sketches = {name: make_sketch(kind, **params) for name, kind, _, params, _ in spec_list}
+    """Task body: read the needed columns of each work unit, feed one
+    :class:`~sketch_spark.spark.agg.TaskFeed`, emit serialized states."""
+    task = TaskFeed(spec_list)
     cols = sorted({c for _, _, c, _, _ in spec_list} | set(extra_columns))
     any_unit = False
-    for path, rg_lo, rg_hi in units:
+    for unit in units:
         any_unit = True
-        if rg_lo is None:
-            table = pq.read_table(path, columns=cols, use_threads=False)
-        else:
-            pf = pq.ParquetFile(path)
-            table = pf.read_row_groups(list(range(rg_lo, rg_hi)), columns=cols, use_threads=False)
+        table = _read_unit(unit, cols)
         if row_filter is not None:
             table = row_filter(table)
-        for name, _, col, _, want_float in spec_list:
-            vals = _extract_from_array(table.column(col), want_float)
-            # bounded feed: a whole-file unit can be tens of millions of
-            # values; most kinds bound their own transients internally, and
-            # the batch-boundary-dependent kinds (pccm/cbf/pcbf/vac/hk) get
-            # a deterministic fixed-size sequence here — kill/resume and
-            # re-run stay byte-identical because the slicing is a pure
-            # function of the unit
-            for s in range(0, len(vals), _base.UPDATE_SUPER):
-                sketches[name].update(vals[s : s + _base.UPDATE_SUPER])
+        task.feed(table)
     if any_unit:
-        yield {name: sk.to_bytes() for name, sk in sketches.items()}
+        yield {name: sk.to_bytes() for name, sk in task.finish().items()}
 
 
 def _plan_units(files: list[str], target: int) -> list[tuple]:
@@ -107,22 +117,10 @@ def _plan_units(files: list[str], target: int) -> list[tuple]:
     return units
 
 
-def _fold_states(dicts: Iterable[dict[str, bytes]]) -> Iterator[dict[str, bytes]]:
-    """Fold many serialized state-dicts into one: each input is deserialized
-    exactly once and the accumulator is re-serialized exactly once (a
-    pairwise reduce would pay compress+decompress per step)."""
-    acc: dict[str, Sketch] | None = None
-    for d in dicts:
-        if acc is None:
-            acc = {name: from_bytes(blob) for name, blob in d.items()}
-        else:
-            for name, blob in d.items():
-                acc[name].merge(from_bytes(blob))
-    if acc is not None:
-        yield {name: sk.to_bytes() for name, sk in acc.items()}
-
-
 def _fold_objects(dicts: Iterable[dict[str, bytes]]) -> dict[str, Sketch]:
+    """Fold many serialized state-dicts into one: each input is deserialized
+    exactly once (a pairwise reduce would pay compress+decompress per
+    step)."""
     acc: dict[str, Sketch] | None = None
     for d in dicts:
         if acc is None:
@@ -133,6 +131,16 @@ def _fold_objects(dicts: Iterable[dict[str, bytes]]) -> dict[str, Sketch]:
     if acc is None:
         raise ValueError("no states to merge")
     return acc
+
+
+def _fold_states(dicts: Iterable[dict[str, bytes]]) -> Iterator[dict[str, bytes]]:
+    """One tree level: :func:`_fold_objects`, re-serialized once; an empty
+    partition yields nothing."""
+    it = iter(dicts)
+    first = next(it, None)
+    if first is not None:
+        acc = _fold_objects(itertools.chain((first,), it))
+        yield {name: sk.to_bytes() for name, sk in acc.items()}
 
 
 # Spark SQL type → the Arrow type Spark's Python runner expects for that
@@ -267,17 +275,9 @@ def sketch_by_key_from_parquet(
 
 
 def _read_unit_batches(units: Iterable[tuple], cols: list[str]) -> Iterator:
-    """Yield Arrow record batches for the work units (single-threaded
-    pyarrow — Spark owns core-level parallelism)."""
-    import pyarrow.parquet as pq
-
-    for path, rg_lo, rg_hi in units:
-        if rg_lo is None:
-            table = pq.read_table(path, columns=cols, use_threads=False)
-        else:
-            pf = pq.ParquetFile(path)
-            table = pf.read_row_groups(list(range(rg_lo, rg_hi)), columns=cols, use_threads=False)
-        yield from table.to_batches()
+    """Yield Arrow record batches for the work units."""
+    for unit in units:
+        yield from _read_unit(unit, cols).to_batches()
 
 
 def build_sketches_from_parquet(
