@@ -64,7 +64,6 @@ from sketch_spark.spark import (  # noqa: F401
     build_sketches_from_parquet,
     estimate_udf,
     get_spark,
-    merge_states_expr,
     partition_states,
     quantile_udf,
     rollup_states,

@@ -2,7 +2,6 @@ from sketch_spark.spark.agg import (  # noqa: F401
     SketchSpec,
     build_sketches,
     estimate_udf,
-    merge_states_expr,
     partition_states,
     quantile_udf,
     rollup_states,

@@ -24,14 +24,14 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from functools import reduce
-from typing import Any, Iterator
+from typing import Any, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark import RDD
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 
 from sketch_spark.hashing import hash_strings
@@ -215,57 +215,68 @@ def partition_states(df: DataFrame, specs: list[SketchSpec]) -> DataFrame:
     return df.select(*cols).mapInArrow(build, _STATE_SCHEMA)
 
 
-def _merge_bytes(a: bytes, b: bytes) -> bytes:
-    sa = from_bytes(bytes(a))
-    sa.merge(from_bytes(bytes(b)))
-    return sa.to_bytes()
+def fold_states(pairs: Iterable[tuple[Any, bytes]]) -> dict[Any, Sketch | bytes]:
+    """The one state fold: (key, state bytes) pairs → one state per key.
 
-
-def _fold_named_states(rows) -> "Iterator[tuple[str, bytes]]":
-    """Partition-local fold of (name, state) pairs: each incoming state is
-    deserialized once, the accumulator serialized once — a pairwise reduce
-    would pay compress/decompress per step."""
-    acc: dict[str, Sketch] = {}
-    for name, blob in rows:
-        sk = from_bytes(bytes(blob))
-        if name in acc:
-            acc[name].merge(sk)
-        else:
-            acc[name] = sk
-    for name, sk in acc.items():
-        yield name, sk.to_bytes()
-
-
-def tree_merge_states(states: DataFrame, fanout: int = 16) -> dict[str, Sketch]:
-    """Log-fanout tree merge of serialized states → driver dict.
-
-    Each level coalesces the partition count by ``fanout`` and folds the
-    co-located states with a single deserialize-once pass, so no task ever
-    re-serializes per pair: the correct version of the reference's disabled
-    binomial-tree reduction (mpiParallelIO.cpp:301-345).
-    """
-    rdd = states.select("name", "state").rdd.map(lambda r: (r[0], bytes(r[1])))
-    nparts = max(1, rdd.getNumPartitions())
-    rdd = rdd.mapPartitions(_fold_named_states)
-    while nparts > fanout:
-        nparts = max(fanout, nparts // fanout)
-        # shuffle=True: narrow coalesce would collapse the upstream partial-
-        # aggregation stage to `nparts` tasks; the shuffle moves only states
-        rdd = rdd.coalesce(nparts, shuffle=True).mapPartitions(_fold_named_states)
-    out: dict[str, Sketch] = {}
-    for name, blob in rdd.collect():
-        sk = from_bytes(blob)
-        if name in out:
-            out[name].merge(sk)
-        else:
-            out[name] = sk
+    Each input is deserialized once (a pairwise reduce would pay
+    compress/decompress per step). A key seen once keeps its input bytes
+    untouched, so a partition that already holds one state per key — every
+    partial-aggregation task — passes through with no decode or re-encode;
+    a merged key holds a :class:`Sketch`. :func:`_as_bytes` and
+    :func:`_as_sketch` normalize the values."""
+    out: dict[Any, Sketch | bytes] = {}
+    for key, blob in pairs:
+        cur = out.get(key)
+        if cur is None:
+            out[key] = blob
+            continue
+        if not isinstance(cur, Sketch):
+            cur = out[key] = from_bytes(bytes(cur))
+        cur.merge(from_bytes(bytes(blob)))
     return out
 
 
-def build_sketches(df: DataFrame, specs: list[SketchSpec], fanout: int = 16) -> dict[str, Sketch]:
+def _as_bytes(state: Sketch | bytes) -> bytes:
+    return state.to_bytes() if isinstance(state, Sketch) else bytes(state)
+
+
+def _as_sketch(state: Sketch | bytes) -> Sketch:
+    return state if isinstance(state, Sketch) else from_bytes(bytes(state))
+
+
+def _fold_partition(pairs) -> Iterator[tuple[Any, bytes]]:
+    return ((key, _as_bytes(state)) for key, state in fold_states(pairs).items())
+
+
+# Fanout of the merge tree: a level runs only while more than TREE_FANOUT
+# partitions remain, so the serial driver fold sees at most TREE_FANOUT
+# states per name and each level is one shuffle of kilobyte states.
+TREE_FANOUT = 16
+
+
+def tree_merge_states(states: DataFrame | RDD) -> dict[str, Sketch]:
+    """Log-fanout tree merge of serialized states → driver dict. ``states``
+    is a (name, state) DataFrame or an RDD of (name, state bytes) pairs.
+
+    Every partition is folded in place, then each level coalesces the
+    partition count by :data:`TREE_FANOUT` and folds the co-located states
+    again: the correct version of the reference's disabled binomial-tree
+    reduction (mpiParallelIO.cpp:301-345)."""
+    rdd = states.select("name", "state").rdd if isinstance(states, DataFrame) else states
+    nparts = max(1, rdd.getNumPartitions())
+    rdd = rdd.mapPartitions(_fold_partition)
+    while nparts > TREE_FANOUT:
+        nparts = max(TREE_FANOUT, nparts // TREE_FANOUT)
+        # shuffle=True: narrow coalesce would collapse the upstream partial-
+        # aggregation stage to `nparts` tasks; the shuffle moves only states
+        rdd = rdd.coalesce(nparts, shuffle=True).mapPartitions(_fold_partition)
+    return {name: _as_sketch(state) for name, state in fold_states(rdd.collect()).items()}
+
+
+def build_sketches(df: DataFrame, specs: list[SketchSpec]) -> dict[str, Sketch]:
     """scan → per-partition partial sketches → tree merge → {name: Sketch}.
     An empty input yields the identity (empty) sketch for every spec."""
-    out = tree_merge_states(partition_states(df, specs), fanout=fanout)
+    out = tree_merge_states(partition_states(df, specs))
     for s in specs:
         out.setdefault(s.name, s.new())
     return out
@@ -277,7 +288,6 @@ def build_weighted_sketch(
     value_col: str,
     weight_col: str,
     params: dict | None = None,
-    fanout: int = 16,
 ) -> Sketch:
     """Weighted build: one sketch over (value, weight) PAIR rows — for kinds
     whose ``update(values, counts=...)`` takes per-item weights (cms,
@@ -303,7 +313,7 @@ def build_weighted_sketch(
         )
 
     states = df.select(value_col, weight_col).mapInArrow(build, "name string, state binary")
-    out = tree_merge_states(states, fanout=fanout)
+    out = tree_merge_states(states)
     return out.get("w", make_sketch(kind, **params))
 
 
@@ -513,12 +523,10 @@ def merge_keyed_states(
     key_types = [key_type] if isinstance(key_type, str) else list(key_type)
 
     def final_merge(pdf):
-        sk = from_bytes(bytes(pdf["state"].iloc[0]))
-        for blob in pdf["state"].iloc[1:]:
-            sk.merge(from_bytes(bytes(blob)))
+        (state,) = fold_states((0, blob) for blob in pdf["state"]).values()
         row = {k: [pdf[k].iloc[0]] for k in keys}
         row["name"] = [pdf["name"].iloc[0]]
-        row["state"] = [sk.to_bytes()]
+        row["state"] = [_as_bytes(state)]
         return pd.DataFrame(row)
 
     schema = ", ".join(
@@ -590,19 +598,3 @@ def quantile_udf(qs: list[float]):
         )
 
     return _q
-
-
-def merge_states_expr(df: DataFrame, group_cols: list[str]) -> DataFrame:
-    """groupBy(group_cols, name) reduce-merge of a states DataFrame."""
-
-    def m(pdf):
-        sk = from_bytes(bytes(pdf["state"].iloc[0]))
-        for blob in pdf["state"].iloc[1:]:
-            sk.merge(from_bytes(bytes(blob)))
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row["name"] = [pdf["name"].iloc[0]]
-        row["state"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
-    schema = ", ".join([f"{c} string" for c in group_cols] + ["name string", "state binary"])
-    return df.groupBy(*group_cols, "name").applyInPandas(m, schema)

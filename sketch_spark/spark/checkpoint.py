@@ -1,13 +1,23 @@
 """Checkpointed, resumable sketch builds with per-file lineage.
 
 The unit of lineage is the input *file* (stable across runs, unlike Spark
-partition ids): each input parquet file's partial sketch states are written
-to a parquet checkpoint table keyed by file path. Resume = list files,
-anti-join against already-checkpointed files, compute only the missing ones,
-then merge everything. Because every sketch update is deterministic
+partition ids): each input parquet file's sketch states are written to a
+parquet checkpoint table of (file, name, state) rows. Resume = list files,
+drop the ones already in the checkpoint, compute only the missing ones,
+then tree-merge everything. Because every sketch update is deterministic
 (seeded hashes, registerwise max/add merges), the resumed global estimate is
 byte-identical to an uninterrupted run — the reference's serialization
 round-trip guarantee (testsrc/serial_test.cpp:25-39) lifted to job level.
+
+Each pending file is built by the parquet-direct task body
+(``files._build_states_for_units`` over one whole-file unit, fed through
+:class:`~sketch_spark.spark.agg.TaskFeed`), so its columns go parquet →
+Arrow → NumPy inside the task with no JVM row→Arrow exchange. Lineage keys
+are the absolute paths the driver lists, whatever form ``input_path`` was
+given in — so a re-run from a relative path finds its files done (and
+checkpoints whose keys came from Spark's absolute ``input_file_name()``
+still match). A checkpoint holds one spec set: resuming it with different
+spec names raises instead of silently merging a partial set.
 
 This is the Iceberg-snapshot pattern from SURVEY.md §4 implemented over
 plain parquet (Iceberg's runtime jars aren't in this sandbox; the layout —
@@ -21,17 +31,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from sketch_spark.sketches.base import Sketch, from_bytes
-from sketch_spark.spark.agg import SketchSpec, merge_states_expr, sketch_by_key
-
-
-def _list_input_files(spark: SparkSession, input_path: str) -> list[str]:
-    files = [
-        os.path.join(input_path, f)
-        for f in os.listdir(input_path)
-        if f.endswith(".parquet")
-    ]
-    return sorted(files)
+from sketch_spark.sketches.base import Sketch
+from sketch_spark.spark.agg import SketchSpec, tree_merge_states
+from sketch_spark.spark.files import _build_states_for_units, _n_slices, list_parquet_files
 
 
 def checkpointed_build(
@@ -46,33 +48,40 @@ def checkpointed_build(
 
     ``fail_after_files`` injects a crash after K files for resume tests.
     """
-    all_files = _list_input_files(spark, input_path)
+    all_files = [os.path.abspath(f) for f in list_parquet_files(input_path)]
+    if not all_files:
+        raise ValueError(f"no parquet files under {input_path!r}")
     done: set[str] = set()
     if os.path.exists(ckpt_dir) and any(
         f.endswith(".parquet") for f in os.listdir(ckpt_dir)
     ):
-        done = {
-            r[0]
-            for r in spark.read.parquet(ckpt_dir).select("file").distinct().collect()
-        }
-    todo = [f for f in all_files if f not in done]
-    if fail_after_files is not None:
-        todo = todo[:fail_after_files]
+        seen = spark.read.parquet(ckpt_dir).select("file", "name").distinct().collect()
+        done = {r["file"] for r in seen}
+        stored, wanted = {r["name"] for r in seen}, {s.name for s in specs}
+        if stored != wanted:
+            raise ValueError(
+                f"checkpoint {ckpt_dir!r} holds specs {sorted(stored)}, not the "
+                f"requested {sorted(wanted)} (added {sorted(wanted - stored)}, "
+                f"missing {sorted(stored - wanted)}): use a new checkpoint directory"
+            )
+    pending = [f for f in all_files if f not in done]
+    todo = pending[:fail_after_files] if fail_after_files is not None else pending
     if todo:
-        df = spark.read.parquet(*todo).withColumn(
-            "file", F.regexp_replace(F.input_file_name(), "^file:/+", "/")
-        )
-        states = sketch_by_key(df, "file", specs)
+        spec_list = [(s.name, s.kind, s.col, dict(s.params), s.is_quantile) for s in specs]
+
+        def task(files):
+            for f in files:
+                for name, state in _build_states_for_units([(f, None, None)], spec_list):
+                    yield f, name, state
+
+        rows = spark.sparkContext.parallelize(todo, _n_slices(spark, len(todo))).mapPartitions(task)
+        states = spark.createDataFrame(rows, "file string, name string, state binary")
         states.write.mode("append").parquet(ckpt_dir)
-    if fail_after_files is not None and len(todo) < len(
-        [f for f in all_files if f not in done]
-    ):
+    if len(todo) < len(pending):
         raise RuntimeError("injected failure: checkpoint incomplete")
 
     # final merge over all checkpointed states (tiny: |files|×|specs| rows)
-    states = spark.read.parquet(ckpt_dir)
-    merged = merge_states_expr(states.select("name", "state").withColumn("g", F.lit("all")), ["g"])
-    return {r["name"]: from_bytes(bytes(r["state"])) for r in merged.collect()}
+    return tree_merge_states(spark.read.parquet(ckpt_dir))
 
 
 def lineage_report(spark: SparkSession, ckpt_dir: str) -> DataFrame:

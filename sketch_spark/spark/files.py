@@ -10,11 +10,14 @@ columns directly with pyarrow inside each task skips the double conversion
 — the bytes go parquet → Arrow → NumPy zero-copy — and gives *true* column
 pruning (only the sketched columns are read at all).
 
-Scale design: the task unit is the input file (at 100 TB, files ≫ cores, so
-Spark's scheduler balances them; per-task pyarrow runs single-threaded to
-avoid oversubscribing executor cores — Spark owns the parallelism). States
-merge through a log-depth treeReduce, kilobytes per task regardless of
-input size. This is the same execution shape as the reference's MPI job
+Scale design: the work unit is the input file (at 100 TB, files ≫ cores, so
+Spark's scheduler balances them) or, with fewer files than cores, a
+row-group range; units are range-sliced into about one task per core, and
+per-task pyarrow runs single-threaded to avoid oversubscribing executor
+cores — Spark owns the parallelism. Each task emits one (name, state) pair
+per spec, and the pairs merge through the one log-fanout tree of
+``agg.tree_merge_states``, kilobytes per task regardless of input size.
+This is the same execution shape as the reference's MPI job
 (mpiParallelIO.cpp: chunked parallel read → local sketch → gathered merge)
 with Spark doing the scheduling, retries, and the tree correctly (the
 reference's own tree combine is disabled as buggy, mpiParallelIO.cpp:83-84).
@@ -42,15 +45,21 @@ states (tested)."""
 
 from __future__ import annotations
 
-import itertools
 import os
 from typing import Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import SparkSession
 
-from sketch_spark.sketches.base import Sketch, from_bytes
-from sketch_spark.spark.agg import SketchSpec, TaskFeed, _keyed_partial, merge_keyed_states
+from sketch_spark.sketches.base import Sketch
+from sketch_spark.spark.agg import (
+    FLUSH_KEYS,
+    SketchSpec,
+    TaskFeed,
+    _keyed_partial,
+    merge_keyed_states,
+    tree_merge_states,
+)
 
 
 def list_parquet_files(path_or_files: str | list[str]) -> list[str]:
@@ -80,9 +89,10 @@ def _read_unit(unit: tuple, cols: list[str]) -> pa.Table:
 
 def _build_states_for_units(
     units: Iterable[tuple], spec_list: list[tuple], row_filter=None, extra_columns=()
-) -> Iterator[dict[str, bytes]]:
+) -> Iterator[tuple[str, bytes]]:
     """Task body: read the needed columns of each work unit, feed one
-    :class:`~sketch_spark.spark.agg.TaskFeed`, emit serialized states."""
+    :class:`~sketch_spark.spark.agg.TaskFeed`, emit one (name, state bytes)
+    pair per spec — nothing when there were no units."""
     task = TaskFeed(spec_list)
     cols = sorted({c for _, _, c, _, _ in spec_list} | set(extra_columns))
     any_unit = False
@@ -93,7 +103,15 @@ def _build_states_for_units(
             table = row_filter(table)
         task.feed(table)
     if any_unit:
-        yield {name: sk.to_bytes() for name, sk in task.finish().items()}
+        for name, sk in task.finish().items():
+            yield name, sk.to_bytes()
+
+
+def _n_slices(spark: SparkSession, n_units: int) -> int:
+    """Tasks sized to the cluster: ~1 slice per core (each task pre-merges
+    its units locally and ships ONE state set), but never fewer than
+    units/8 so a straggler unit can't dominate a slice on a big cluster."""
+    return min(n_units, max(spark.sparkContext.defaultParallelism, n_units // 8))
 
 
 def _plan_units(files: list[str], target: int) -> list[tuple]:
@@ -115,32 +133,6 @@ def _plan_units(files: list[str], target: int) -> list[tuple]:
         bounds = [round(i * n_rg / k) for i in range(k + 1)]
         units.extend((f, bounds[i], bounds[i + 1]) for i in range(k) if bounds[i] < bounds[i + 1])
     return units
-
-
-def _fold_objects(dicts: Iterable[dict[str, bytes]]) -> dict[str, Sketch]:
-    """Fold many serialized state-dicts into one: each input is deserialized
-    exactly once (a pairwise reduce would pay compress+decompress per
-    step)."""
-    acc: dict[str, Sketch] | None = None
-    for d in dicts:
-        if acc is None:
-            acc = {name: from_bytes(blob) for name, blob in d.items()}
-        else:
-            for name, blob in d.items():
-                acc[name].merge(from_bytes(blob))
-    if acc is None:
-        raise ValueError("no states to merge")
-    return acc
-
-
-def _fold_states(dicts: Iterable[dict[str, bytes]]) -> Iterator[dict[str, bytes]]:
-    """One tree level: :func:`_fold_objects`, re-serialized once; an empty
-    partition yields nothing."""
-    it = iter(dicts)
-    first = next(it, None)
-    if first is not None:
-        acc = _fold_objects(itertools.chain((first,), it))
-        yield {name: sk.to_bytes() for name, sk in acc.items()}
 
 
 # Spark SQL type → the Arrow type Spark's Python runner expects for that
@@ -223,9 +215,7 @@ def sketch_by_key_from_parquet(
         {c for _, _, c, _, _ in spec_list} | set(keys) | ({weight_col} if weight_col else set())
     )
 
-    par = spark.sparkContext.defaultParallelism
-    units = _plan_units(files, par)
-    n_slices = min(len(units), max(par, len(units) // 8))
+    units = _plan_units(files, spark.sparkContext.defaultParallelism)
 
     # Arrow-native phase-1 handoff: the partial batches `_keyed_partial`
     # emits are ALREADY Arrow, so ship them through mapInArrow unchanged
@@ -249,15 +239,14 @@ def sketch_by_key_from_parquet(
     )
 
     def task(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from sketch_spark.spark.agg import FLUSH_KEYS
-
-        def unit_stream():
-            for b in it:
-                yield from zip(
-                    b.column(0).to_pylist(), b.column(1).to_pylist(), b.column(2).to_pylist()
-                )
-
-        batches = _read_unit_batches(unit_stream(), cols)
+        batches = (
+            batch
+            for b in it
+            for unit in zip(
+                b.column(0).to_pylist(), b.column(1).to_pylist(), b.column(2).to_pylist()
+            )
+            for batch in _read_unit(unit, cols).to_batches()
+        )
         for out in _keyed_partial(
             batches, keys, spec_list, weight_col, flush_keys or FLUSH_KEYS
         ):
@@ -265,19 +254,13 @@ def sketch_by_key_from_parquet(
             # dialect (large_string, naive timestamps) — normalize
             yield out if out.schema == target else out.cast(target)
 
-    unit_rows = spark.sparkContext.parallelize(list(units), n_slices)
+    unit_rows = spark.sparkContext.parallelize(units, _n_slices(spark, len(units)))
     units_df = spark.createDataFrame(unit_rows, "path string, rg_lo int, rg_hi int")
     schema = ", ".join(
         [f"{k} {t}" for k, t in zip(keys, key_types)] + ["name string", "state binary"]
     )
     partials = units_df.mapInArrow(task, schema)
     return merge_keyed_states(partials, keys, key_types)
-
-
-def _read_unit_batches(units: Iterable[tuple], cols: list[str]) -> Iterator:
-    """Yield Arrow record batches for the work units."""
-    for unit in units:
-        yield from _read_unit(unit, cols).to_batches()
 
 
 def build_sketches_from_parquet(
@@ -287,44 +270,26 @@ def build_sketches_from_parquet(
     row_filter=None,
     extra_columns: tuple[str, ...] = (),
 ) -> dict[str, Sketch]:
-    """Whole-table sketch build, parquet-direct: one Spark task per input
-    file → per-file sketch states → log-fanout coalesce-merge tree.
+    """Whole-table sketch build, parquet-direct: the input files are
+    planned into work units (whole files, or row-group ranges when there
+    are fewer files than cores), the units are range-sliced into about one
+    Spark task per core, each task folds its units into one
+    (name, state) pair per spec, and the pairs go through the same merge
+    tree as :func:`~sketch_spark.spark.agg.tree_merge_states`.
 
-    ``row_filter``: optional ``pa.Table -> pa.Table`` applied per file (the
+    ``row_filter``: optional ``pa.Table -> pa.Table`` applied per unit (the
     pushdown hook for simple predicates; must be deterministic).
     ``extra_columns``: columns the filter needs beyond the sketched ones."""
     files = list_parquet_files(path_or_files)
     if not files:
         raise ValueError(f"no parquet files under {path_or_files!r}")
     spec_list = [(s.name, s.kind, s.col, dict(s.params), s.is_quantile) for s in specs]
-    # tasks sized to the cluster: ~1 slice per core (each task pre-merges its
-    # units locally and ships ONE state set), but never fewer than units/8 so
-    # a straggler unit can't dominate a slice on a big cluster. Fewer files
-    # than cores → row-group splitting keeps the scan full-width.
-    par = spark.sparkContext.defaultParallelism
-    units = _plan_units(files, par)
-    n_slices = min(len(units), max(par, len(units) // 8))
-    rdd = spark.sparkContext.parallelize(units, n_slices).mapPartitions(
+    # fewer files than cores → row-group splitting keeps the scan full-width
+    units = _plan_units(files, spark.sparkContext.defaultParallelism)
+    pairs = spark.sparkContext.parallelize(units, _n_slices(spark, len(units))).mapPartitions(
         lambda part: _build_states_for_units(part, spec_list, row_filter, extra_columns)
     )
-    # log-fanout tree of partition-local folds (coalesce = no shuffle), then a
-    # driver-side object fold over the last ≤ fanout states. Each state is
-    # deserialized once per level — the correct version of the reference's
-    # disabled binomial tree (mpiParallelIO.cpp:301-345). Fanout 8 keeps the
-    # serial driver fold tiny (≤ 8 states) while the heavy fold levels run as
-    # parallel tasks.
-    # NOTE shuffle=True: a narrow coalesce would collapse the *map* stage to
-    # `nparts` tasks (losing scan parallelism); shuffling the kilobyte-scale
-    # states keeps the scan at full width and only the fold runs narrow
-    fanout = 8
-    nparts = n_slices
-    while nparts > fanout:
-        nparts = max(fanout, nparts // fanout)
-        rdd = rdd.coalesce(nparts, shuffle=True).mapPartitions(_fold_states)
-    collected = rdd.collect()
-    if not collected:  # all files empty → identity sketches
-        return {s.name: s.new() for s in specs}
-    out = _fold_objects(collected)
+    out = tree_merge_states(pairs)
     for s in specs:
         out.setdefault(s.name, s.new())
     return out

@@ -23,8 +23,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from sketch_spark.sketches.base import Sketch, from_bytes
-from sketch_spark.spark.agg import SketchSpec, partition_states
+from sketch_spark.sketches.base import Sketch
+from sketch_spark.spark.agg import (
+    SketchSpec,
+    _as_sketch,
+    fold_states,
+    partition_states,
+    tree_merge_states,
+)
 
 
 class StreamingSketchBuild:
@@ -79,16 +85,7 @@ class StreamingSketchBuild:
         """Merged sketches over every micro-batch processed so far."""
         if not os.path.exists(self.states_dir):
             raise ValueError("no streaming states yet")
-        states = self.spark.read.parquet(self.states_dir)
-        rows = states.select("name", "state").collect()
-        out: dict[str, Sketch] = {}
-        for r in rows:
-            sk = from_bytes(bytes(r["state"]))
-            if r["name"] in out:
-                out[r["name"]].merge(sk)
-            else:
-                out[r["name"]] = sk
-        return out
+        return tree_merge_states(self.spark.read.parquet(self.states_dir))
 
     def current_decayed(self, name: str) -> Sketch:
         """Recency-weighted fold for a `realccm` (decayed CMS) spec: merge
@@ -105,13 +102,7 @@ class StreamingSketchBuild:
         rows = states.where(F.col("name") == name).select("batch_id", "state").collect()
         if not rows:
             raise ValueError(f"no states for spec {name!r}")
-        per_batch: dict[int, Sketch] = {}
-        for r in rows:
-            sk = from_bytes(bytes(r["state"]))
-            if r["batch_id"] in per_batch:
-                per_batch[r["batch_id"]].merge(sk)
-            else:
-                per_batch[r["batch_id"]] = sk
+        per_batch = {bid: _as_sketch(st) for bid, st in fold_states(rows).items()}
         first = per_batch[min(per_batch)]
         acc = type(first)(**{**first._params(), "epoch": 0})
         for bid in sorted(per_batch):

@@ -10,6 +10,7 @@ import pytest
 
 from sketch_spark.spark.agg import SketchSpec
 from sketch_spark.spark.checkpoint import checkpointed_build, lineage_report
+from sketch_spark.spark.files import build_sketches_from_parquet
 
 SPECS = [
     SketchSpec("h", "hll", "tokens", {"p": 12}),
@@ -68,3 +69,40 @@ def test_rerun_after_completion_is_stable(spark, fixtures, ckpt_dir):
     again = checkpointed_build(spark, input_path, SPECS, ckpt_dir)  # no new work
     for name in ("h", "c"):
         assert first[name].to_bytes() == again[name].to_bytes()
+
+
+def test_rerun_from_relative_path_does_not_double_count(spark, fixtures, ckpt_dir):
+    """Lineage keys are absolute paths, so a finished build re-run from a
+    relative input path finds every file done instead of appending its
+    states a second time."""
+    d, answers = fixtures
+    rel = os.path.relpath(os.path.join(d, "uniform"))
+    assert not os.path.isabs(rel)
+    n_files = len([f for f in os.listdir(rel) if f.endswith(".parquet")])
+    for _ in range(2):
+        sk = checkpointed_build(spark, rel, SPECS[:2], ckpt_dir)
+        assert sk["c"].total() == answers["uniform"]["n_tokens"]
+        rep = lineage_report(spark, ckpt_dir).collect()
+        assert len(rep) == n_files
+        assert all(r["n_states"] == 2 for r in rep)
+
+
+def test_changed_spec_set_raises(spark, fixtures, ckpt_dir):
+    d, _ = fixtures
+    input_path = os.path.join(d, "uniform")
+    checkpointed_build(spark, input_path, SPECS[:1], ckpt_dir)
+    with pytest.raises(ValueError, match=r"added \['c'\], missing \[\]"):
+        checkpointed_build(spark, input_path, SPECS[:2], ckpt_dir)
+    with pytest.raises(ValueError, match=r"added \['c'\], missing \['h'\]"):
+        checkpointed_build(spark, input_path, SPECS[1:2], ckpt_dir)
+
+
+def test_states_match_the_parquet_direct_build(spark, fixtures, ckpt_dir):
+    """Per-file checkpoint states fold to the parquet-direct build's bytes
+    for every kind the merge-law tests show is partition-invariant."""
+    d, _ = fixtures
+    input_path = os.path.join(d, "uniform")
+    ckpt = checkpointed_build(spark, input_path, SPECS, ckpt_dir)
+    direct = build_sketches_from_parquet(spark, input_path, SPECS)
+    for name in ("h", "c", "s", "y", "p"):
+        assert ckpt[name].to_bytes() == direct[name].to_bytes(), name

@@ -14,19 +14,20 @@ import pytest
 
 import sketch_spark.sketches  # noqa: F401  (registers every kind)
 import sketch_spark.sketches.base as base_mod
-from sketch_spark.sketches.base import _REGISTRY, from_bytes, make_sketch
+from sketch_spark.sketches.base import _REGISTRY, from_bytes, make_sketch, merge_all
 from sketch_spark.spark.agg import (
     DENSE_CAP,
     SketchSpec,
     TaskFeed,
+    _as_bytes,
     _extract_column,
+    _fold_partition,
     _is_dense,
     build_sketches,
+    fold_states,
 )
 from sketch_spark.spark.files import (
     _build_states_for_units,
-    _fold_objects,
-    _fold_states,
     build_sketches_from_parquet,
     list_parquet_files,
 )
@@ -145,10 +146,11 @@ def dense_spy(monkeypatch):
 
 def _check(units, dense_spy, specs=SPECS, row_filter=None):
     spec_list = _spec_list(specs)
-    out = list(_build_states_for_units(units, spec_list, row_filter))
-    assert len(out) == 1
-    assert out[0] == _raw_states(units, spec_list, row_filter)
-    return out[0]
+    pairs = list(_build_states_for_units(units, spec_list, row_filter))
+    states = dict(pairs)
+    assert len(pairs) == len(states) == len(spec_list)  # one state per spec
+    assert states == _raw_states(units, spec_list, row_filter)
+    return states
 
 
 def test_mixed_dense_and_sparse_units(tmp_path, dense_spy):
@@ -251,17 +253,17 @@ def test_task_feed_counts_values_per_spec(tmp_path):
     assert feed.n_values["k"] == feed.n_values["hw"] == 40
 
 
-def test_fold_states_wraps_fold_objects():
+def test_fold_states_decodes_each_state_once():
     rng = np.random.default_rng(14)
-    dicts = [
-        {"h": make_sketch("hll", p=8).update(rng.integers(0, 10**6, 500)).to_bytes()}
+    blobs = [
+        make_sketch("hll", p=8).update(rng.integers(0, 10**6, 500)).to_bytes()
         for _ in range(3)
     ]
-    (folded,) = list(_fold_states(iter(dicts)))
-    assert folded == {"h": _fold_objects(dicts)["h"].to_bytes()}
-    assert list(_fold_states(iter([]))) == []
-    with pytest.raises(ValueError, match="no states"):
-        _fold_objects([])
+    folded = fold_states(("h", b) for b in blobs)
+    assert list(folded) == ["h"]
+    assert _as_bytes(folded["h"]) == merge_all([from_bytes(b) for b in blobs]).to_bytes()
+    assert fold_states([]) == {}
+    assert list(_fold_partition(iter([]))) == []
 
 
 def test_dense_gate():

@@ -14,9 +14,12 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from sketch_spark.sketches.base import from_bytes, make_sketch
+import sketch_spark.spark.agg as agg_mod
+from sketch_spark.sketches.base import from_bytes, make_sketch, merge_all
 from sketch_spark.spark.agg import (
+    TREE_FANOUT,
     SketchSpec,
+    _fold_partition,
     build_sketches,
     estimate_udf,
     partition_states,
@@ -171,13 +174,43 @@ def test_partition_states_metrics(spark, uniform_df):
 
 
 def test_tree_merge_matches_flat_merge(spark, uniform_df):
-    states = partition_states(uniform_df, [SketchSpec("h", "hll", "tokens", {"p": 10})])
-    tree = tree_merge_states(states, fanout=2)["h"]
-    blobs = [bytes(r["state"]) for r in states.collect()]
-    flat = from_bytes(blobs[0])
-    for b in blobs[1:]:
-        flat.merge(from_bytes(b))
-    assert tree.to_bytes() == flat.to_bytes()
+    specs = [
+        SketchSpec("h", "hll", "tokens", {"p": 10}),
+        SketchSpec("c", "cms", "tokens", {"l2sz": 10, "nh": 3}),
+    ]
+    rows = partition_states(uniform_df, specs).select("name", "state").collect()
+    assert len(rows) >= 3 * len(specs)
+    schema = "name string, state binary"
+    # one partition holding several states per name, then more partitions
+    # than TREE_FANOUT (most of them empty), so at least one tree level runs
+    states = spark.createDataFrame(rows[:-2], schema).coalesce(1).union(
+        spark.createDataFrame(rows[-2:], schema).repartition(2 * TREE_FANOUT)
+    )
+    sizes = states.rdd.glom().map(len).collect()
+    assert len(sizes) > TREE_FANOUT and 0 in sizes and sizes[0] >= len(specs) + 1
+    tree = tree_merge_states(states)
+    assert sorted(tree) == ["c", "h"]
+    for s in specs:
+        flat = merge_all([from_bytes(bytes(r["state"])) for r in rows if r["name"] == s.name])
+        assert tree[s.name].to_bytes() == flat.to_bytes()
+
+
+def test_fold_passes_single_states_through(monkeypatch):
+    """A partition holding one state per name — every partial-aggregation
+    task — leaves the fold as the same bytes, without a single decode; a
+    repeated name is decoded once per state."""
+    calls = []
+    real = agg_mod.from_bytes
+    monkeypatch.setattr(agg_mod, "from_bytes", lambda b: calls.append(b) or real(b))
+    rng = np.random.default_rng(3)
+    vals = rng.integers(0, 10**6, 2_000)
+    h = make_sketch("hll", p=10).update(vals).to_bytes()
+    c = make_sketch("cms", l2sz=10, nh=3).update(vals).to_bytes()
+    assert list(_fold_partition(iter([("h", h), ("c", c)]))) == [("h", h), ("c", c)]
+    assert calls == []
+    (name, merged), (_, same) = _fold_partition(iter([("c", c), ("h", h), ("c", c)]))
+    assert name == "c" and same == h and len(calls) == 2
+    assert from_bytes(merged).total() == 2 * len(vals)
 
 
 def test_estimate_and_quantile_udfs(spark, fixtures):
