@@ -95,7 +95,7 @@ def pairwise_df(states: DataFrame, key: str, metric: str = "jaccard") -> DataFra
     Scoring: Arrow-batched pandas UDF with a per-batch deserialization
     cache — each distinct state decodes once per batch (metric methods are
     non-mutating, same contract the driver loop relies on), so per-pair
-    cost is the metric arithmetic, not zlib+parse."""
+    cost is the metric arithmetic, not decompress+parse."""
     if metric not in _METRICS:
         raise ValueError(f"unknown metric {metric!r}; have {_METRICS}")
 

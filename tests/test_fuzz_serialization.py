@@ -1,13 +1,53 @@
 """Hypothesis fuzz: for every sketch kind, random parameters × random data
 must round-trip byte-identically through to_bytes/from_bytes, and the
 restored sketch must keep updating identically to the original (SURVEY.md
-§5 item 5 generalized across the whole registry)."""
+§5 item 5 generalized across the whole registry). Also: the payload codec
+choice, and that frames with zlib payloads (what older code wrote into
+checkpoint and streaming state directories) still load."""
+
+import json
+import os
+import shutil
+import zlib
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from sketch_spark.sketches.base import _REGISTRY, from_bytes, make_sketch
+
+
+def _header(buf: bytes) -> dict:
+    hlen = int.from_bytes(buf[6:10], "little")
+    return json.loads(buf[10 : 10 + hlen].decode())
+
+
+def _raw_payload(buf: bytes) -> bytes:
+    """The uncompressed array payload of a frame written by this code."""
+    header = _header(buf)
+    payload = buf[10 + int.from_bytes(buf[6:10], "little") :]
+    if header["comp"] == "raw":
+        return payload
+    assert header["comp"] == "zstd"
+    size = sum(
+        np.dtype(m["dtype"]).itemsize * int(np.prod(m["shape"], dtype=np.int64))
+        for m in header["arrays"]
+    )
+    return pa.Codec("zstd").decompress(payload, size, asbytes=True)
+
+
+def _reframe(buf: bytes, comp: str, payload: bytes) -> bytes:
+    header = _header(buf)
+    header["comp"] = comp
+    h2 = json.dumps(header, separators=(",", ":"), sort_keys=True).encode()
+    return buf[:6] + len(h2).to_bytes(4, "little") + h2 + payload
+
+
+def _to_zlib(buf: bytes) -> bytes:
+    """Rewrite a state frame with a zlib-1 payload, as older code wrote it."""
+    return _reframe(buf, "zlib", zlib.compress(_raw_payload(buf), 1))
+
 
 PARAM_STRATEGIES = {
     "hll": st.fixed_dictionaries({"p": st.integers(4, 14)}),
@@ -86,18 +126,10 @@ PARAM_STRATEGIES = {
 }
 
 
-def test_every_registered_kind_has_a_fuzz_strategy():
-    assert set(PARAM_STRATEGIES) == set(_REGISTRY)
-
-
-@pytest.mark.parametrize("kind", sorted(PARAM_STRATEGIES))
-@settings(max_examples=10, deadline=None)
-@given(data=st.data())
-def test_roundtrip_and_resume(kind, data):
+def _draw_sketch(kind, data):
     params = data.draw(PARAM_STRATEGIES[kind])
-    seed = data.draw(st.integers(0, 2**31))
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**31)))
     n = data.draw(st.integers(0, 5000))
-    rng = np.random.default_rng(seed)
     if kind == "tensorsketch":
         # vector-set sketch: (n, d) float matrices, not 1-D streams
         vals = rng.normal(size=(min(n, 64), params["d"]))
@@ -108,12 +140,101 @@ def test_roundtrip_and_resume(kind, data):
     else:
         vals = rng.integers(0, 2**40, n, dtype=np.int64)
         more = rng.integers(0, 2**40, 100, dtype=np.int64)
-    sk = make_sketch(kind, **params).update(vals)
+    return make_sketch(kind, **params).update(vals), more
+
+
+def test_every_registered_kind_has_a_fuzz_strategy():
+    assert set(PARAM_STRATEGIES) == set(_REGISTRY)
+
+
+@pytest.mark.parametrize("kind", sorted(PARAM_STRATEGIES))
+@settings(max_examples=10, deadline=None)
+@given(data=st.data())
+def test_roundtrip_and_resume(kind, data):
+    sk, more = _draw_sketch(kind, data)
     blob = sk.to_bytes()
     back = from_bytes(blob)
     assert back.to_bytes() == blob
+    # codec rule: zstd only above 4096 B and only when under 0.9x raw
+    raw = _raw_payload(blob)
+    zstd = pa.Codec("zstd", compression_level=1).compress(raw)
+    keep_raw = len(raw) <= 4096 or len(zstd) >= 0.9 * len(raw)
+    assert _header(blob)["comp"] == ("raw" if keep_raw else "zstd")
     # the restored sketch must keep evolving identically
     assert back.update(more).to_bytes() == sk.update(more).to_bytes()
+
+
+@pytest.mark.parametrize("kind", sorted(PARAM_STRATEGIES))
+@settings(max_examples=5, deadline=None)
+@given(data=st.data())
+def test_zlib_frames_still_load(kind, data):
+    sk, _ = _draw_sketch(kind, data)
+    blob = sk.to_bytes()
+    old = _to_zlib(blob)
+    assert _header(old)["comp"] == "zlib"
+    # loads as the original sketch, and re-serializes to the current frame
+    assert from_bytes(old).to_bytes() == blob
+
+
+@pytest.mark.parametrize(
+    "kind,kw,n,comp",
+    [
+        # 64 KB of mostly-zero counters
+        ("cms", {"l2sz": 14, "nh": 4}, 100, "zstd"),
+        # 8 KB of bits about half set: near-random, zstd saves < 10%
+        ("bloom", {"l2sz": 16, "nh": 4}, 12_000, "raw"),
+        # 1 KB of registers: under the 4096 B threshold
+        ("hll", {"p": 10}, 100_000, "raw"),
+    ],
+)
+def test_codec_choice(kind, kw, n, comp):
+    sk = make_sketch(kind, **kw).update(np.arange(n, dtype=np.int64))
+    blob = sk.to_bytes()
+    assert _header(blob)["comp"] == comp
+    if kind == "bloom":
+        assert 0.4 < sk.popcount() / sk.m < 0.6
+    assert from_bytes(blob).to_bytes() == blob
+
+
+def test_unknown_codec_raises_naming_it():
+    sk = make_sketch("cms", l2sz=14, nh=4).update(np.arange(100, dtype=np.int64))
+    blob = sk.to_bytes()
+    with pytest.raises(ValueError, match="lz77"):
+        from_bytes(_reframe(blob, "lz77", zlib.compress(_raw_payload(blob), 1)))
+
+
+def test_checkpoint_resume_over_zlib_frames(spark, fixtures, tmp_path):
+    """A checkpoint whose first half was written by older code (zlib
+    frames) resumes to the bytes of an uninterrupted build."""
+    import pyarrow.parquet as pq
+
+    from sketch_spark.spark.agg import SketchSpec
+    from sketch_spark.spark.checkpoint import checkpointed_build
+
+    specs = [
+        SketchSpec("h", "hll", "tokens", {"p": 12}),
+        SketchSpec("c", "cms", "tokens", {"l2sz": 14, "nh": 4}),
+        SketchSpec("b", "bloom", "tokens", {"l2sz": 16, "nh": 3}),
+        SketchSpec("s", "smh", "tokens", {"m": 128}),
+    ]
+    input_path = os.path.join(fixtures[0], "uniform")
+    n_files = len([f for f in os.listdir(input_path) if f.endswith(".parquet")])
+    control = checkpointed_build(spark, input_path, specs, str(tmp_path / "control"))
+
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        checkpointed_build(spark, input_path, specs, ckpt, fail_after_files=n_files // 2)
+    table = pq.read_table(ckpt)
+    states = table.column("state").to_pylist()
+    assert any(_header(b)["comp"] == "zstd" for b in states)
+    shutil.rmtree(ckpt)
+    os.makedirs(ckpt)
+    old = pa.array([_to_zlib(b) for b in states], pa.binary())
+    pq.write_table(table.set_column(2, "state", old), os.path.join(ckpt, "part-old.parquet"))
+
+    resumed = checkpointed_build(spark, input_path, specs, ckpt)
+    for s in specs:
+        assert resumed[s.name].to_bytes() == control[s.name].to_bytes(), s.name
 
 
 # ---- hash-family wire guard -------------------------------------------------
@@ -124,7 +245,6 @@ def test_roundtrip_and_resume(kind, data):
 # refuse instead.
 
 import json as _json
-import zlib as _zlib
 
 import pytest as _pytest
 
