@@ -24,6 +24,13 @@ from sketch_spark import mem as _mem
 # it would tax every fresh buffer ~40x. See sketch_spark/mem.py.
 _mem.tune()
 
+from sketch_spark.spark.session import skip_unchanged_zip_rereads
+
+# PySpark's worker calls importlib.invalidate_caches() before every task,
+# which re-reads pyspark.zip and Spark's core jar: 0.1-0.3 s per task. Re-read
+# a zip import index only when the archive changed. See spark/session.py.
+skip_unchanged_zip_rereads()
+
 from sketch_spark.sketches import (  # noqa: F401
     BBitMinHash,
     BloomFilter,
