@@ -51,6 +51,7 @@ TOKEN_DOCS = {"0.001": 600, "0.01": 6_000, "0.1": 60_000}
 
 
 from sketch_spark import mem as _mem
+from perfbench.host import cpu_times, steal_pct as _steal_pct
 
 
 def fault_canary_mb_s(mb: int = 64) -> float:
@@ -96,24 +97,13 @@ def main() -> None:
             SketchSpec("mh", "minhash", "tokens", {"k": 1024}),
             SketchSpec("kll", "kll", "n_tok", {"k": 200}),
         ]
-        def _cpu_stat():
-            try:
-                with open("/proc/stat") as f:
-                    return [int(x) for x in f.readline().split()[1:]]
-            except OSError:
-                return None
-
         la0 = round(os.getloadavg()[0], 2)
         canary0 = fault_canary_mb_s()
-        c0 = _cpu_stat()
+        c0 = cpu_times()
         t0 = time.perf_counter()
         sk = build_sketches_from_parquet(spark, tok_dir, specs)
         wall = time.perf_counter() - t0
-        c1 = _cpu_stat()
-        xl_steal = None
-        if c0 and c1 and len(c1) > 7:
-            d = [b - a for a, b in zip(c0, c1)]
-            xl_steal = round(100 * d[7] / (sum(d) or 1), 1)
+        xl_steal = round(_steal_pct(c0, cpu_times()), 1)
         assert sk["cms"].total() == n_tokens
         print(
             json.dumps(
@@ -156,18 +146,11 @@ def main() -> None:
     loadavg: dict[str, list[float]] = {}
     steal_pct: dict[str, list[float]] = {}
 
-    def _cpu_stat():
-        try:
-            with open("/proc/stat") as f:
-                return [int(x) for x in f.readline().split()[1:]]
-        except OSError:
-            return None
-
     def timed(name):
         class _T:
             def __enter__(self):
                 loadavg.setdefault(name, []).append(round(os.getloadavg()[0], 2))
-                self.c0 = _cpu_stat()
+                self.c0 = cpu_times()
                 self.t0 = time.perf_counter()
                 return self
 
@@ -177,15 +160,13 @@ def main() -> None:
                 if name not in timings or dt < timings[name]:
                     timings[name] = dt
                 loadavg[name].append(round(os.getloadavg()[0], 2))
-                c1 = _cpu_stat()
-                if self.c0 and c1 and len(c1) > 7:
-                    d = [b - a for a, b in zip(self.c0, c1)]
-                    tot = sum(d) or 1
-                    # /proc/stat field 8 = steal: cycles the hypervisor gave
-                    # to co-tenant VMs. Loadavg can't see those; steal is the
-                    # direct evidence when a rep is slow through no fault of
-                    # the code (measured 9-20% bursts on this box)
-                    steal_pct.setdefault(name, []).append(round(100 * d[7] / tot, 1))
+                # steal: cycles the hypervisor gave to co-tenant VMs.
+                # Loadavg can't see those; steal is the direct evidence when
+                # a rep is slow through no fault of the code (measured 9-20%
+                # bursts on a shared cloud VM)
+                steal_pct.setdefault(name, []).append(
+                    round(_steal_pct(self.c0, cpu_times()), 1)
+                )
 
         return _T()
 

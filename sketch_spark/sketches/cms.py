@@ -54,6 +54,15 @@ _U64 = np.uint64
 SUPER = CHUNK * 32
 
 
+def _narrowest(lo: int, hi: int) -> np.dtype:
+    """The smallest signed integer dtype holding [lo, hi]."""
+    for dt in (np.int8, np.int16, np.int32):
+        info = np.iinfo(dt)
+        if info.min <= lo and hi <= info.max:
+            return np.dtype(dt)
+    return np.dtype(np.int64)
+
+
 class _TableSketch(Sketch):
     """Shared layout: (nh, 2^l2sz) counter matrix + seeded row hashes."""
 
@@ -113,20 +122,41 @@ class _TableSketch(Sketch):
         # wire-format compaction: partition-level counters are small, so ship
         # the narrowest dtype that holds the value range (the reference packs
         # counters to nbits via compact_vector, ccm.h:154; same idea, dtype
-        # granularity). Restored to int64 in _from_state.
+        # granularity). Restored to int64 in _from_state. A skewed stream
+        # leaves a few hot cells beyond int8 that would widen every cell, so
+        # when it is smaller the table ships as int8 with those cells zeroed
+        # plus their flat indices and values ("patches"). The int8 array is
+        # deliberately not named "table": code that predates patches must
+        # fail on such a state, not read the zeroed cells.
         t = self.table
-        if t.size:
-            lo, hi = int(t.min()), int(t.max())
-            for dt in (np.int8, np.int16, np.int32):
-                info = np.iinfo(dt)
-                if info.min <= lo and hi <= info.max:
-                    return {"table": t.astype(dt)}
-        return {"table": t}
+        if not t.size:
+            return {"table": t}
+        lo, hi = int(t.min()), int(t.max())
+        full = _narrowest(lo, hi)
+        if full == np.int8:
+            return {"table": t.astype(np.int8)}
+        flat = t.reshape(-1)
+        hot = flat > 127
+        if lo < -128:  # only signed tables (count sketches) pay this pass
+            hot |= flat < -128
+        idx = np.flatnonzero(hot)
+        idx = idx.astype(np.int32 if flat.size <= 1 << 31 else np.int64)
+        vals = flat[idx]
+        vals = vals.astype(_narrowest(int(vals.min()), int(vals.max())))
+        if flat.size + len(idx) * (idx.itemsize + vals.itemsize) >= flat.size * full.itemsize:
+            return {"table": t.astype(full)}
+        low = t.astype(np.int8)
+        low.reshape(-1)[idx] = 0
+        return {"table_i8": low, "patch_idx": idx, "patch_val": vals}
 
     @classmethod
     def _from_state(cls, params, arrays):
         obj = cls(**params)
-        obj.table = arrays["table"].astype(cls.dtype)
+        if "table" in arrays:
+            obj.table = arrays["table"].astype(cls.dtype)
+        else:
+            obj.table = arrays["table_i8"].astype(cls.dtype)
+            obj.table.reshape(-1)[arrays["patch_idx"]] = arrays["patch_val"]
         return obj
 
     def merge(self, other):
@@ -330,12 +360,6 @@ class CountSketch4W(CountSketch):
             out[i] = poly_hash_mersenne(chunk, self._coeffs[i])
         return out
 
-    @classmethod
-    def _from_state(cls, params, arrays):
-        obj = cls(**params)
-        obj.table = arrays["table"].astype(cls.dtype)
-        return obj
-
 
 @register
 class MorrisCMS(_TableSketch):
@@ -388,14 +412,12 @@ class MorrisCMS(_TableSketch):
         return {"l2sz": self.l2sz, "nh": self.nh, "seed": self.seed, "nbits": self.nbits}
 
     def _arrays(self) -> dict[str, np.ndarray]:
-        out = super()._arrays()
-        out["rounds"] = np.array([self.rounds], dtype=np.uint64)
-        return out
+        # uint8 cells already are the narrow form: no widening, no patches
+        return {"table": self.table, "rounds": np.array([self.rounds], dtype=np.uint64)}
 
     @classmethod
     def _from_state(cls, params, arrays):
-        obj = cls(**params)
-        obj.table = arrays["table"].astype(cls.dtype)
+        obj = super()._from_state(params, arrays)
         obj.rounds = int(arrays["rounds"][0]) if "rounds" in arrays else 0
         return obj
 

@@ -81,10 +81,12 @@ def _read_unit(unit: tuple, cols: list[str]) -> pa.Table:
     import pyarrow.parquet as pq
 
     path, rg_lo, rg_hi = unit
-    if rg_lo is None:
-        return pq.read_table(path, columns=cols, use_threads=False)
-    pf = pq.ParquetFile(path)
-    return pf.read_row_groups(list(range(rg_lo, rg_hi)), columns=cols, use_threads=False)
+    with pq.ParquetFile(path) as pf:
+        if rg_lo is None:
+            # ParquetFile.read, not pq.read_table: the same table without the
+            # dataset layer's per-call set-up (≈ 1 ms per file)
+            return pf.read(columns=cols, use_threads=False)
+        return pf.read_row_groups(list(range(rg_lo, rg_hi)), columns=cols, use_threads=False)
 
 
 def _build_states_for_units(

@@ -102,6 +102,37 @@ def test_row_group_splitting_single_big_file(spark, tmp_path):
     assert abs(got.estimate() - exact) <= 3 * got.relative_error() * exact
 
 
+def test_read_unit_equals_read_table(tmp_path):
+    """A whole-file unit and row-group-range units covering the file read
+    the same columns as pq.read_table."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sketch_spark.spark.files import _read_unit
+
+    path = str(tmp_path / "rg.parquet")
+    rng = np.random.default_rng(11)
+    lens = rng.integers(0, 40, 5_000)
+    pq.write_table(
+        pa.table(
+            {
+                "tokens": pa.array([rng.integers(0, 10**6, n).tolist() for n in lens]),
+                "n_tok": lens,
+                "source": rng.choice(["a", "b", "c"], len(lens)),
+            }
+        ),
+        path,
+        row_group_size=700,
+    )
+    assert pq.ParquetFile(path).metadata.num_row_groups == 8
+    cols = ["n_tok", "tokens"]
+    want = pq.read_table(path, columns=cols)
+    assert _read_unit((path, None, None), cols).equals(want)
+    parts = [_read_unit((path, lo, hi), cols) for lo, hi in ((0, 1), (1, 5), (5, 8))]
+    assert pa.concat_tables(parts).equals(want)
+
+
 def test_plan_units_whole_files_when_many(tmp_path):
     from sketch_spark.spark.files import _plan_units
 

@@ -37,8 +37,8 @@ def _raw_payload(buf: bytes) -> bytes:
     return pa.Codec("zstd").decompress(payload, size, asbytes=True)
 
 
-def _reframe(buf: bytes, comp: str, payload: bytes) -> bytes:
-    header = _header(buf)
+def _reframe(buf: bytes, comp: str, payload: bytes, **fields) -> bytes:
+    header = {**_header(buf), **fields}
     header["comp"] = comp
     h2 = json.dumps(header, separators=(",", ":"), sort_keys=True).encode()
     return buf[:6] + len(h2).to_bytes(4, "little") + h2 + payload
@@ -291,3 +291,114 @@ def test_hf_tag_rides_in_params_only_for_km_kinds():
         hlen = int.from_bytes(buf[6:10], "little")
         header = _json.loads(buf[10 : 10 + hlen].decode())
         assert header["params"].get("hf") == expect
+
+
+# ---- patched counter tables -------------------------------------------------
+# cms / countsketch / cs4w tables ship as int8 with the cells that do not fit
+# zeroed, plus their flat indices and values, whenever that is smaller than
+# the narrowest full-width table. A patched frame has no "table" array, so
+# code that predates patches raises instead of reading the zeroed cells.
+
+TABLE_KINDS = ["cms", "countsketch", "cs4w"]
+
+
+def _dtypes(buf: bytes) -> dict[str, str]:
+    return {m["name"]: m["dtype"] for m in _header(buf)["arrays"]}
+
+
+def _table_sketch(kind: str, hot: dict[int, int], fill: np.ndarray):
+    sk = make_sketch(kind, l2sz=12, nh=4)
+    sk.table[...] = fill.reshape(sk.table.shape)
+    sk.table.reshape(-1)[list(hot)] = list(hot.values())
+    return sk
+
+
+def _small_counts(kind: str, size: int) -> np.ndarray:
+    """Cells like a partition's table: mostly small, signed for count sketches."""
+    c = np.random.default_rng(4).poisson(2, size)
+    return c if kind == "cms" else c - 2
+
+
+def _table_frame(sk, dtype, comp: str) -> bytes:
+    """The frame code before patched tables wrote: the whole table at one
+    dtype, zstd-1 or zlib-1 compressed."""
+    raw = sk.table.astype(dtype).tobytes()
+    payload = (
+        pa.Codec("zstd", compression_level=1).compress(raw, asbytes=True)
+        if comp == "zstd"
+        else zlib.compress(raw, 1)
+    )
+    arrays = [{"name": "table", "dtype": np.dtype(dtype).str, "shape": list(sk.table.shape)}]
+    return _reframe(sk.to_bytes(), comp, payload, arrays=arrays)
+
+
+PATCHED = {"table_i8": "|i1", "patch_idx": "<i4"}
+
+
+@pytest.mark.parametrize("kind", TABLE_KINDS)
+@pytest.mark.parametrize(
+    "hot,fill,want",
+    [
+        ({}, 0, {"table": "|i1"}),  # all zero
+        ({9: 127}, "small", {"table": "|i1"}),
+        ({777: 1000}, "small", {**PATCHED, "patch_val": "<i2"}),  # one hot cell
+        ({5: 2**40}, "small", {**PATCHED, "patch_val": "<i8"}),
+        ({}, 1000, {"table": "<i2"}),  # every cell overflows: full width
+        ({}, 2**33, {"table": "<i8"}),
+    ],
+)
+def test_patched_table_form(kind, hot, fill, want):
+    size = 4 << 12
+    fill = _small_counts(kind, size) if fill == "small" else np.full(size, fill)
+    sk = _table_sketch(kind, hot, fill)
+    blob = sk.to_bytes()
+    assert _dtypes(blob) == want
+    back = from_bytes(blob)
+    assert back.table.dtype == np.int64 and np.array_equal(back.table, sk.table)
+    assert back.to_bytes() == blob
+
+
+@pytest.mark.parametrize("kind", ["countsketch", "cs4w"])
+def test_patched_table_negative_overflow(kind):
+    hot = {3: -5000, 4000: -129, 4001: 300, 4002: -128}
+    sk = _table_sketch(kind, hot, _small_counts(kind, 4 << 12))
+    blob = sk.to_bytes()
+    assert _dtypes(blob) == {**PATCHED, "patch_val": "<i2"}
+    shapes = {m["name"]: m["shape"] for m in _header(blob)["arrays"]}
+    assert shapes["patch_idx"] == [3]  # -128 fits int8
+    assert np.array_equal(from_bytes(blob).table, sk.table)
+
+
+@pytest.mark.parametrize("kind", TABLE_KINDS)
+@pytest.mark.parametrize("dtype", [np.int8, np.int16, np.int32, np.int64])
+@pytest.mark.parametrize("comp", ["zstd", "zlib"])
+def test_full_width_table_frames_still_load(kind, dtype, comp):
+    fill = _small_counts(kind, 4 << 12)
+    hot = {} if dtype == np.int8 else {777: int(np.iinfo(dtype).max)}
+    sk = _table_sketch(kind, hot, fill)
+    old = _table_frame(sk, dtype, comp)
+    back = from_bytes(old)
+    assert np.array_equal(back.table, sk.table)
+    assert back.to_bytes() == sk.to_bytes()
+
+
+@pytest.mark.parametrize("kind", TABLE_KINDS)
+def test_patched_frame_smaller_than_int32_frame(kind):
+    """One hot cell beyond int16 made the whole table int32 on the wire."""
+    sk = _table_sketch(kind, {777: 100_000}, _small_counts(kind, 4 << 12))
+    blob = sk.to_bytes()
+    assert len(blob) < len(_table_frame(sk, np.int32, "zstd"))
+    assert "table" not in _dtypes(blob)
+
+
+def test_pccm_uint8_cells_roundtrip():
+    """pccm cells are uint8 exponents: cells above 127 ship unchanged as
+    |u1, neither widened nor patched away."""
+    sk = make_sketch("pccm", l2sz=4, nh=2)
+    sk.table[0, :4] = [200, 200, 200, 5]
+    sk.rounds = 3
+    blob = sk.to_bytes()
+    assert _dtypes(blob) == {"table": "|u1", "rounds": "<u8"}
+    back = from_bytes(blob)
+    assert back.table.dtype == np.uint8 and np.array_equal(back.table, sk.table)
+    assert back.rounds == 3 and back.to_bytes() == blob
