@@ -54,15 +54,15 @@ from sketch_spark import mem as _mem
 from perfbench.host import cpu_times, steal_pct as _steal_pct
 
 
-def fault_canary_mb_s(mb: int = 64) -> float:
-    """First-touch page-fault throughput (MB/s) — see sketch_spark/mem.py
-    for the THP-direct-compaction regime this detects (NumPy faults at
-    ~45 MB/s instead of GB/s while steal%% and loadavg stay quiet). The
-    import of sketch_spark above already auto-tuned this process, so the
-    run-start reading here reflects the POST-tuning environment the
-    timings actually ran under; `hugepage_tuning` in the output records
-    the probe the tuner itself saw."""
-    return _mem.first_touch_mb_s(mb)
+# The flagship spec set, shared by the --xl run and the sf run's
+# token_hll_build.
+FLAGSHIP_SPECS = [
+    SketchSpec("hll", "hll", "tokens", {"p": 14}),
+    SketchSpec("cms", "cms", "tokens", {"l2sz": 18, "nh": 4}),
+    SketchSpec("bloom", "bloom", "tokens", {"l2sz": 24, "nh": 3}),
+    SketchSpec("mh", "minhash", "tokens", {"k": 1024}),
+    SketchSpec("kll", "kll", "n_tok", {"k": 200}),
+]
 
 
 def main() -> None:
@@ -90,18 +90,11 @@ def main() -> None:
         tok_dir = ensure_token_table(n_docs=2_000_000)
         tok = spark.read.parquet(tok_dir)
         n_tokens = int(tok.select(F.sum("n_tok")).first()[0])
-        specs = [
-            SketchSpec("hll", "hll", "tokens", {"p": 14}),
-            SketchSpec("cms", "cms", "tokens", {"l2sz": 18, "nh": 4}),
-            SketchSpec("bloom", "bloom", "tokens", {"l2sz": 24, "nh": 3}),
-            SketchSpec("mh", "minhash", "tokens", {"k": 1024}),
-            SketchSpec("kll", "kll", "n_tok", {"k": 200}),
-        ]
         la0 = round(os.getloadavg()[0], 2)
-        canary0 = fault_canary_mb_s()
+        canary0 = _mem.first_touch_mb_s(64)
         c0 = cpu_times()
         t0 = time.perf_counter()
-        sk = build_sketches_from_parquet(spark, tok_dir, specs)
+        sk = build_sketches_from_parquet(spark, tok_dir, FLAGSHIP_SPECS)
         wall = time.perf_counter() - t0
         xl_steal = round(_steal_pct(c0, cpu_times()), 1)
         assert sk["cms"].total() == n_tokens
@@ -117,7 +110,7 @@ def main() -> None:
                     "n_tokens": n_tokens,
                     "loadavg": {"flagship_xl": [la0, round(os.getloadavg()[0], 2)]},
                     "steal_pct": {"flagship_xl": [xl_steal]},
-                    "fault_mb_s": [canary0, fault_canary_mb_s()],
+                    "fault_mb_s": [canary0, _mem.first_touch_mb_s(64)],
                     "hugepage_tuning": _mem.last_tuning,
                     "affinity_cores": len(os.sched_getaffinity(0)),
                     "host_cores": os.cpu_count(),
@@ -139,7 +132,7 @@ def main() -> None:
     # one rep of many queries instead of every rep of one query, and the
     # min is the code's quiet-window cost. all_reps + per-rep loadavg ride
     # along so the spread itself is recorded, not discarded.
-    canary0 = fault_canary_mb_s()
+    canary0 = _mem.first_touch_mb_s(64)
     timings: dict[str, float] = {}
     all_reps: dict[str, list[float]] = {}
     extra: dict[str, float] = {}
@@ -177,13 +170,6 @@ def main() -> None:
     tok_dir = ensure_token_table(n_docs=n_docs)
     tok = spark.read.parquet(tok_dir)
     n_tokens = tok.select(F.sum("n_tok")).first()[0]
-    token_specs = [
-        SketchSpec("hll", "hll", "tokens", {"p": 14}),
-        SketchSpec("cms", "cms", "tokens", {"l2sz": 18, "nh": 4}),
-        SketchSpec("bloom", "bloom", "tokens", {"l2sz": 24, "nh": 3}),
-        SketchSpec("mh", "minhash", "tokens", {"k": 1024}),
-        SketchSpec("kll", "kll", "n_tok", {"k": 200}),
-    ]
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -196,7 +182,7 @@ def main() -> None:
     # warm the Python-worker / AQE / codegen paths once: cold first use
     # measured 2-3× steady state (the round-1 "variance" and the round-2
     # cosine_topk "regression" were both session first-use, see BASELINE.md)
-    build_sketches_from_parquet(spark, tok_dir, token_specs)
+    build_sketches_from_parquet(spark, tok_dir, FLAGSHIP_SPECS)
     minhash_lsh_neardups(docs.limit(200), threshold=0.7, num_hashes=64, bands=8).count()
     brute_force_topk(emb, qvecs, qids, k=10).collect()
 
@@ -209,7 +195,7 @@ def main() -> None:
     # methodology as BENCH_XL's min-of-3.
     for _rep in range(args.reps):
         with timed("token_hll_build"):
-            sk = build_sketches_from_parquet(spark, tok_dir, token_specs)
+            sk = build_sketches_from_parquet(spark, tok_dir, FLAGSHIP_SPECS)
         assert sk["cms"].total() == n_tokens
 
     for _rep in range(args.reps):
@@ -292,9 +278,10 @@ def main() -> None:
         # hypervisor steal (% of ALL cpu cycles) during each rep — the
         # co-tenant noise loadavg can't see
         "steal_pct": steal_pct,
-        # first-touch fault throughput [run start, run end] plus the
-        # import-time tuner decision — see fault_canary_mb_s / mem.py
-        "fault_mb_s": [canary0, fault_canary_mb_s()],
+        # first-touch fault throughput in MB/s over 64 MB [run start, run
+        # end; the start reading is taken after the import-time hugepage
+        # tuning] plus that tuner's decision — see sketch_spark/mem.py
+        "fault_mb_s": [canary0, _mem.first_touch_mb_s(64)],
         "hugepage_tuning": _mem.last_tuning,
         "affinity_cores": len(os.sched_getaffinity(0)),
         "host_cores": os.cpu_count(),

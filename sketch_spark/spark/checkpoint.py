@@ -67,11 +67,9 @@ def checkpointed_build(
     pending = [f for f in all_files if f not in done]
     todo = pending[:fail_after_files] if fail_after_files is not None else pending
     if todo:
-        spec_list = [(s.name, s.kind, s.col, dict(s.params), s.is_quantile) for s in specs]
-
         def task(files):
             for f in files:
-                for name, state in _build_states_for_units([(f, None, None)], spec_list):
+                for name, state in _build_states_for_units([(f, None, None)], specs):
                     yield f, name, state
 
         rows = spark.sparkContext.parallelize(todo, _n_slices(spark, len(todo))).mapPartitions(task)

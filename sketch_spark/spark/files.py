@@ -22,21 +22,20 @@ This is the same execution shape as the reference's MPI job
 with Spark doing the scheduling, retries, and the tree correctly (the
 reference's own tree combine is disabled as buggy, mpiParallelIO.cpp:83-84).
 
-Vocabulary pre-aggregation: the task body feeds one
-:class:`~sketch_spark.spark.agg.TaskFeed` (the DataFrame and streaming
-global builds use the same one). Each column is extracted once per unit.
-When every id of a unit lies in [0, 2^22) (``agg.DENSE_CAP``), the unit is
-added to one ``np.bincount`` accumulator per column, sized to the largest
-id seen — at most 32 MB of int64 per column per task — and at task end the
-distinct ids go once to every spec whose kind declares
-``Sketch.preaggregate``: ``update(ids)`` for the set-determined hll/dhll/
-bloom/minhash, ``update(ids, counts=...)`` for the additive cms. A
-tokenizer vocabulary that repeats 50 k ids millions of times is hashed and
-scattered 50 k times per sketch instead of once per token. Units that fail
-the gate (negative ids, the null sentinel, hashed strings, ids ≥ 2^22),
-float/quantile specs and every other kind — including the
-batch-boundary-dependent pccm/cbf/pcbf/vac/hk — get the raw stream as
-before. Both routes give byte-identical states.
+Vocabulary pre-aggregation: every task body here — global, grouped and
+checkpointed — feeds one :class:`~sketch_spark.spark.agg.TaskFeed`, the
+same one the DataFrame and streaming builds use, and the grouped build
+feeds it whole unit tables. Each column is extracted and segmented by key
+once per unit. Segments whose ids all lie in [0, 2^22) (``agg.DENSE_CAP``)
+are added to one ``np.bincount`` accumulator per (column, key) — at most
+DENSE_CAP int64 counters (32 MB) per column per task across all keys —
+and at task end the distinct ids go once to every spec whose kind declares
+``Sketch.preaggregate`` (hll/dhll/bloom/minhash by set, cms with counts).
+A tokenizer vocabulary that repeats 50 k ids millions of times is hashed
+and scattered 50 k times per sketch instead of once per token. Every
+other segment, spec and kind — including the batch-boundary-dependent
+pccm/cbf/pcbf/vac/hk — gets the raw stream. Both routes give
+byte-identical states.
 
 The DataFrame path (`sketch_spark.spark.agg`) remains the general route for
 sketching *derived* DataFrames (post-filter/join/column-expr); this module
@@ -90,13 +89,13 @@ def _read_unit(unit: tuple, cols: list[str]) -> pa.Table:
 
 
 def _build_states_for_units(
-    units: Iterable[tuple], spec_list: list[tuple], row_filter=None, extra_columns=()
+    units: Iterable[tuple], specs: list[SketchSpec], row_filter=None, extra_columns=()
 ) -> Iterator[tuple[str, bytes]]:
     """Task body: read the needed columns of each work unit, feed one
     :class:`~sketch_spark.spark.agg.TaskFeed`, emit one (name, state bytes)
     pair per spec — nothing when there were no units."""
-    task = TaskFeed(spec_list)
-    cols = sorted({c for _, _, c, _, _ in spec_list} | set(extra_columns))
+    task = TaskFeed(specs)
+    cols = sorted({s.col for s in specs} | set(extra_columns))
     any_unit = False
     for unit in units:
         any_unit = True
@@ -105,7 +104,7 @@ def _build_states_for_units(
             table = row_filter(table)
         task.feed(table)
     if any_unit:
-        for name, sk in task.finish().items():
+        for (_, name), sk in task.finish().items():
             yield name, sk.to_bytes()
 
 
@@ -192,15 +191,18 @@ def sketch_by_key_from_parquet(
     column or a list (fine-granularity builds for
     :func:`sketch_spark.spark.agg.rollup_states`).
 
-    States are byte-identical to the DataFrame path for the
-    partitioning-invariant kinds (hll/bloom/cms/minhash/…, the §5 merge
-    invariant) — regression-tested."""
+    Each task feeds its whole unit tables to one keyed
+    :class:`~sketch_spark.spark.agg.TaskFeed`, which pre-aggregates dense
+    ids per (column, key) as the global builds do. States are
+    byte-identical to the DataFrame path for the partitioning-invariant
+    kinds (hll/bloom/cms/minhash/…, the §5 merge invariant) —
+    regression-tested; the batch-boundary-dependent kinds see one update
+    per unit here and one per Arrow batch there."""
     import pyarrow.parquet as pq
 
     files = list_parquet_files(path_or_files)
     if not files:
         raise ValueError(f"no parquet files under {path_or_files!r}")
-    spec_list = [(s.name, s.kind, s.col, dict(s.params), s.is_quantile) for s in specs]
     keys = [key] if isinstance(key, str) else list(key)
     schema_arrow = pq.ParquetFile(files[0]).schema_arrow
     key_types = []
@@ -213,9 +215,7 @@ def sketch_by_key_from_parquet(
             else:
                 raise ValueError(f"unsupported group-key arrow type {arrow_key_t!r}")
         key_types.append(kt)
-    cols = sorted(
-        {c for _, _, c, _, _ in spec_list} | set(keys) | ({weight_col} if weight_col else set())
-    )
+    cols = sorted({s.col for s in specs} | set(keys) | ({weight_col} if weight_col else set()))
 
     units = _plan_units(files, spark.sparkContext.defaultParallelism)
 
@@ -241,17 +241,12 @@ def sketch_by_key_from_parquet(
     )
 
     def task(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        batches = (
-            batch
+        tables = (
+            _read_unit(unit, cols)
             for b in it
-            for unit in zip(
-                b.column(0).to_pylist(), b.column(1).to_pylist(), b.column(2).to_pylist()
-            )
-            for batch in _read_unit(unit, cols).to_batches()
+            for unit in zip(*(b.column(i).to_pylist() for i in range(3)))
         )
-        for out in _keyed_partial(
-            batches, keys, spec_list, weight_col, flush_keys or FLUSH_KEYS
-        ):
+        for out in _keyed_partial(tables, keys, specs, weight_col, flush_keys or FLUSH_KEYS):
             # parquet key types can differ in spelling from Spark's Arrow
             # dialect (large_string, naive timestamps) — normalize
             yield out if out.schema == target else out.cast(target)
@@ -285,11 +280,10 @@ def build_sketches_from_parquet(
     files = list_parquet_files(path_or_files)
     if not files:
         raise ValueError(f"no parquet files under {path_or_files!r}")
-    spec_list = [(s.name, s.kind, s.col, dict(s.params), s.is_quantile) for s in specs]
     # fewer files than cores → row-group splitting keeps the scan full-width
     units = _plan_units(files, spark.sparkContext.defaultParallelism)
     pairs = spark.sparkContext.parallelize(units, _n_slices(spark, len(units))).mapPartitions(
-        lambda part: _build_states_for_units(part, spec_list, row_filter, extra_columns)
+        lambda part: _build_states_for_units(part, specs, row_filter, extra_columns)
     )
     out = tree_merge_states(pairs)
     for s in specs:

@@ -1,9 +1,10 @@
-"""Vocabulary pre-aggregation in the global task body (spark.agg.TaskFeed):
-a unit whose ids are all in [0, DENSE_CAP) is bincounted once per column,
-and the kinds that declare ``Sketch.preaggregate`` get the distinct ids (and
-their counts) once per task. Every state must be byte-identical to the raw
-feed, which is what these tests check — per kind over the whole registry,
-and per edge case through the parquet-direct task body."""
+"""Vocabulary pre-aggregation in the task body (spark.agg.TaskFeed): a
+segment whose ids are all in [0, DENSE_CAP) is bincounted once per (column,
+key), and the kinds that declare ``Sketch.preaggregate`` get the distinct
+ids (and their counts) once per task. Every state must be byte-identical to
+the raw feed, which is what these tests check — per kind over the whole
+registry, per edge case through the parquet-direct task body, and per key
+through the grouped builds."""
 
 import os
 
@@ -15,21 +16,26 @@ import pytest
 import sketch_spark.sketches  # noqa: F401  (registers every kind)
 import sketch_spark.sketches.base as base_mod
 from sketch_spark.sketches.base import _REGISTRY, from_bytes, make_sketch, merge_all
+from sketch_spark.spark import agg
 from sketch_spark.spark.agg import (
     DENSE_CAP,
     SketchSpec,
     TaskFeed,
     _as_bytes,
+    _dense_len,
     _extract_column,
     _fold_partition,
-    _is_dense,
+    _keyed_partial,
     build_sketches,
     fold_states,
+    sketch_by_key,
 )
 from sketch_spark.spark.files import (
     _build_states_for_units,
+    _read_unit,
     build_sketches_from_parquet,
     list_parquet_files,
+    sketch_by_key_from_parquet,
 )
 
 
@@ -69,15 +75,16 @@ def test_declared_kind_preaggregates_byte_identically(kind):
 def test_declared_kinds():
     declared = {k: c.preaggregate for k, c in _REGISTRY.items() if c.preaggregate}
     assert declared == {"hll": "set", "dhll": "set", "bloom": "set", "minhash": "set", "cms": "counts"}
+    assert {s.kind for s in GROUPED_SPECS} == set(declared)  # the grouped tests cover each
 
 
 # ---- task body -------------------------------------------------------------
 
-def _raw_states(units, spec_list, row_filter=None):
+def _raw_states(units, specs, row_filter=None):
     """The task body without pre-aggregation: every spec extracts its
     column per unit and takes the raw stream in UPDATE_SUPER slices."""
-    sketches = {name: make_sketch(kind, **params) for name, kind, _, params, _ in spec_list}
-    cols = sorted({c for _, _, c, _, _ in spec_list})
+    sketches = {s.name: s.new() for s in specs}
+    cols = sorted({s.col for s in specs})
     for path, rg_lo, rg_hi in units:
         if rg_lo is None:
             table = pq.read_table(path, columns=cols)
@@ -85,16 +92,12 @@ def _raw_states(units, spec_list, row_filter=None):
             table = pq.ParquetFile(path).read_row_groups(list(range(rg_lo, rg_hi)), columns=cols)
         if row_filter is not None:
             table = row_filter(table)
-        for name, _, col, _, want_float in spec_list:
-            vals = _extract_column(table, col, want_float)
+        for spec in specs:
+            vals = _extract_column(table, spec.col, spec.is_quantile)
             step = base_mod.UPDATE_SUPER
             for s in range(0, len(vals), step):
-                sketches[name].update(vals[s : s + step])
+                sketches[spec.name].update(vals[s : s + step])
     return {name: sk.to_bytes() for name, sk in sketches.items()}
-
-
-def _spec_list(specs):
-    return [(s.name, s.kind, s.col, dict(s.params), s.is_quantile) for s in specs]
 
 
 def _write(path, tokens, row_group_size=None, typ=pa.int64()):
@@ -135,9 +138,11 @@ def dense_spy(monkeypatch):
     calls = []
     real = TaskFeed._count
 
-    def spy(self, key, vals):
-        calls.append((key, len(vals)))
-        return real(self, key, vals)
+    def spy(self, col_key, key, vals, need):
+        counted = real(self, col_key, key, vals, need)
+        if counted:
+            calls.append((col_key, len(vals)))
+        return counted
 
     monkeypatch.setattr(TaskFeed, "_count", spy)
     monkeypatch.setattr(base_mod, "UPDATE_SUPER", 1_000)
@@ -145,11 +150,10 @@ def dense_spy(monkeypatch):
 
 
 def _check(units, dense_spy, specs=SPECS, row_filter=None):
-    spec_list = _spec_list(specs)
-    pairs = list(_build_states_for_units(units, spec_list, row_filter))
+    pairs = list(_build_states_for_units(units, specs, row_filter))
     states = dict(pairs)
-    assert len(pairs) == len(states) == len(spec_list)  # one state per spec
-    assert states == _raw_states(units, spec_list, row_filter)
+    assert len(pairs) == len(states) == len(specs)  # one state per spec
+    assert states == _raw_states(units, specs, row_filter)
     return states
 
 
@@ -179,9 +183,9 @@ def test_dense_cap_boundary(tmp_path, dense_spy):
     # only the unit whose max id is DENSE_CAP - 1 was counted, and the
     # accumulator is sized to that largest id, not beyond it
     assert len(dense_spy) == 1
-    feed = TaskFeed(_spec_list(SPECS[:1]))
+    feed = TaskFeed(SPECS[:1])
     feed.feed(pq.read_table(below))
-    assert len(feed._counts[("tokens", False)]) == DENSE_CAP
+    assert len(feed._counts[("tokens", False)][()]) == DENSE_CAP
 
 
 @pytest.mark.filterwarnings("ignore:invalid value encountered in cast")
@@ -222,13 +226,13 @@ def test_row_filter_dropping_every_row(tmp_path, dense_spy):
 
 
 def test_no_units_yields_nothing():
-    assert list(_build_states_for_units([], _spec_list(SPECS))) == []
+    assert list(_build_states_for_units([], SPECS)) == []
 
 
 def test_batch_dependent_kind_stays_raw(tmp_path, dense_spy):
     """cbf shares the column with counted specs but must see the raw stream,
     sliced the same way the raw task body slices it."""
-    feed = TaskFeed(_spec_list(SPECS))
+    feed = TaskFeed(SPECS)
     pre, raw = feed._columns[("tokens", False)]
     assert pre == ["h", "h10", "d", "c", "c2", "b", "m"] and raw == ["cbf"]
     assert feed._columns[("n_tok", True)] == ([], ["k"])
@@ -244,12 +248,12 @@ def test_batch_dependent_kind_stays_raw(tmp_path, dense_spy):
 def test_task_feed_counts_values_per_spec(tmp_path):
     ids = _zipf_ids(1_000, 100, seed=13)
     f = _write(tmp_path / "a.parquet", _docs(ids))
-    feed = TaskFeed(_spec_list(SPECS))
+    feed = TaskFeed(SPECS)
     feed.feed(pq.read_table(f))
     feed.feed(pq.read_table(f))
     assert feed.n_values["h"] == feed.n_values["cbf"] == 2_000
     # sized to the largest id seen, not to DENSE_CAP
-    assert len(feed._counts[("tokens", False)]) == ids.max() + 1
+    assert len(feed._counts[("tokens", False)][()]) == ids.max() + 1
     assert feed.n_values["k"] == feed.n_values["hw"] == 40
 
 
@@ -267,13 +271,13 @@ def test_fold_states_decodes_each_state_once():
 
 
 def test_dense_gate():
-    assert _is_dense(np.array([0, 5, DENSE_CAP - 1], dtype=np.int32))
-    assert _is_dense(np.array([7], dtype=np.uint64))
-    assert not _is_dense(np.array([0, DENSE_CAP], dtype=np.int64))
-    assert not _is_dense(np.array([-1, 3], dtype=np.int64))
-    assert not _is_dense(np.array([], dtype=np.int64))
-    assert not _is_dense(np.array([1.0, 2.0]))
-    assert not _is_dense(np.array([True, False]))
+    assert _dense_len(np.array([0, 5, DENSE_CAP - 1], dtype=np.int32)) == DENSE_CAP
+    assert _dense_len(np.array([7], dtype=np.uint64)) == 8
+    assert not _dense_len(np.array([0, DENSE_CAP], dtype=np.int64))
+    assert not _dense_len(np.array([-1, 3], dtype=np.int64))
+    assert not _dense_len(np.array([], dtype=np.int64))
+    assert not _dense_len(np.array([1.0, 2.0]))
+    assert not _dense_len(np.array([True, False]))
 
 
 def test_spark_builds_match_a_raw_local_build(spark, fixtures):
@@ -283,6 +287,110 @@ def test_spark_builds_match_a_raw_local_build(spark, fixtures):
     specs = [s for s in SPECS if s.name in ("h", "d", "c", "b", "m")]
     via_files = build_sketches_from_parquet(spark, path, specs)
     via_df = build_sketches(spark.read.parquet(path), specs)
-    local = _raw_states([(f, None, None) for f in list_parquet_files(path)], _spec_list(specs))
+    local = _raw_states([(f, None, None) for f in list_parquet_files(path)], specs)
     for s in specs:
         assert via_files[s.name].to_bytes() == via_df[s.name].to_bytes() == local[s.name]
+
+
+# ---- grouped builds --------------------------------------------------------
+
+# every kind that declares pre-aggregation, at test-size parameters
+GROUPED_SPECS = [
+    SketchSpec("h", "hll", "tokens", {"p": 10}),
+    SketchSpec("d", "dhll", "tokens", {"p": 8}),
+    SketchSpec("b", "bloom", "tokens", {"l2sz": 14, "nh": 3}),
+    SketchSpec("m", "minhash", "tokens", {"k": 64}),
+    SketchSpec("c", "cms", "tokens", {"l2sz": 10, "nh": 3}),
+]
+
+# the zipf fixture has 4 sources (mask segmenting) and ~950 distinct doc
+# lengths (argsort segmenting)
+GROUP_KEYS = ["source", "n_tok"]
+
+
+def _per_key_states(path, key, specs):
+    """One direct raw-fed sketch per (key, spec) over the key's tokens."""
+    t = pq.read_table(path, columns=[key, "tokens"])
+    uniq, inv = np.unique(np.array(t.column(key).to_pylist(), dtype=object), return_inverse=True)
+    toks = t.column("tokens").combine_chunks()
+    tok_inv = np.repeat(inv, np.diff(toks.offsets.to_numpy()))
+    order = np.argsort(tok_inv, kind="stable")
+    flat = toks.flatten().to_numpy()[order]
+    bounds = np.searchsorted(tok_inv[order], np.arange(len(uniq) + 1))
+    return {
+        (k, s.name): s.new().update(flat[bounds[g] : bounds[g + 1]]).to_bytes()
+        for g, k in enumerate(uniq.tolist())
+        for s in specs
+    }
+
+
+def _grouped_states(batches, key):
+    out = {}
+    for b in batches:
+        d = b.to_pydict()
+        for k, name, state in zip(d[key], d["name"], d["state"]):
+            assert (k, name) not in out
+            out[(k, name)] = bytes(state)
+    return out
+
+
+@pytest.fixture
+def budget_spy(monkeypatch):
+    """Every pre-aggregation attempt: (key, counted, counters the column's
+    accumulators hold afterwards)."""
+    calls = []
+    real = TaskFeed._count
+
+    def spy(self, col_key, key, vals, need):
+        counted = real(self, col_key, key, vals, need)
+        held = sum(len(a) for a in self._counts.get(col_key, {}).values())
+        calls.append((key, counted, held))
+        return counted
+
+    monkeypatch.setattr(TaskFeed, "_count", spy)
+    return calls
+
+
+@pytest.mark.parametrize("key", GROUP_KEYS)
+@pytest.mark.parametrize("shape", ["tables", "batches"])
+def test_grouped_task_body_preaggregates_per_key(fixtures, budget_spy, key, shape):
+    """The grouped task body over whole parquet units (the parquet-direct
+    path) or over small record batches (the DataFrame path's shape) gives
+    the per-key direct bytes, and the bincount route really ran."""
+    path = os.path.join(fixtures[0], "zipf")
+    tables = (_read_unit((f, None, None), ["tokens", key]) for f in list_parquet_files(path))
+    units = tables if shape == "tables" else (b for t in tables for b in t.to_batches(500))
+    got = _grouped_states(_keyed_partial(units, [key], GROUPED_SPECS, None), key)
+    assert got == _per_key_states(path, key, GROUPED_SPECS)
+    counted = {k for k, ok, _ in budget_spy if ok}
+    assert counted and max(held for _, _, held in budget_spy) <= DENSE_CAP
+    if key == "source":
+        assert counted == {("web",), ("code",), ("books",), ("wiki",)}
+
+
+def test_grouped_dense_budget_spans_keys(fixtures, budget_spy, monkeypatch):
+    """A column's accumulators share one DENSE_CAP budget across keys: once
+    it is spent, later keys take the raw route, and the bytes do not
+    change."""
+    cap = 120_000  # about two sources' worth of zipf ids (< 50 000 each)
+    monkeypatch.setattr(agg, "DENSE_CAP", cap)
+    path = os.path.join(fixtures[0], "zipf")
+    units = (_read_unit((f, None, None), ["tokens", "source"]) for f in list_parquet_files(path))
+    got = _grouped_states(_keyed_partial(units, ["source"], GROUPED_SPECS, None), "source")
+    assert got == _per_key_states(path, "source", GROUPED_SPECS)
+    assert max(held for _, _, held in budget_spy) <= cap
+    counted = {k for k, ok, _ in budget_spy if ok}
+    refused = {k for k, ok, _ in budget_spy if not ok} - counted
+    assert counted and refused  # some keys never got an accumulator
+
+
+@pytest.mark.parametrize("key", GROUP_KEYS)
+def test_grouped_builds_match_per_key_builds(spark, fixtures, key):
+    """Both grouped build paths pre-aggregate inside their tasks and still
+    equal a direct raw-fed build per key, byte for byte."""
+    path = os.path.join(fixtures[0], "zipf")
+    want = _per_key_states(path, key, GROUPED_SPECS)
+    via_df = sketch_by_key(spark.read.parquet(path), key, GROUPED_SPECS)
+    via_files = sketch_by_key_from_parquet(spark, path, key, GROUPED_SPECS)
+    for out in (via_df, via_files):
+        assert {(r[key], r["name"]): bytes(r["state"]) for r in out.collect()} == want

@@ -372,6 +372,22 @@ def test_sketch_by_key_weighted_list_column_repeats_row_weight(spark):
     assert from_bytes(out["B"]).to_bytes() == want_b.to_bytes()
 
 
+def test_build_weighted_sketch_list_column_repeats_row_weight(spark):
+    """The ungrouped weighted build over a token-array column applies each
+    row's weight to every token of the row, as sketch_by_key does."""
+    from sketch_spark.spark.agg import build_weighted_sketch
+
+    df = spark.createDataFrame(
+        [("A", [1, 2, 3], 5), ("A", [2], 2), ("B", [7], 3)],
+        "src string, toks array<bigint>, w bigint",
+    )
+    got = build_weighted_sketch(df, "cms", "toks", "w", {"l2sz": 10, "nh": 3})
+    want = make_sketch("cms", l2sz=10, nh=3).update(
+        np.array([1, 2, 3, 2, 7]), counts=np.array([5, 5, 5, 2, 3])
+    )
+    assert got.to_bytes() == want.to_bytes()
+
+
 # ---------------------------------------------------------------------------
 # Multi-key grouped builds + OLAP rollups (round 4)
 # ---------------------------------------------------------------------------

@@ -99,8 +99,7 @@ def main() -> None:
         action="store_true",
         help="alternate small/large single-rep runs instead of back-to-back "
         "blocks — a multi-minute co-tenant burst then hurts both sides "
-        "instead of silently skewing one (same rationale as fusion_bench); "
-        "each side reports its min across rounds",
+        "instead of silently skewing one; each side reports its min across rounds",
     )
     args = ap.parse_args()
 
