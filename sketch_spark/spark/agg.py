@@ -37,9 +37,13 @@ from pyspark.sql.functions import pandas_udf
 
 from sketch_spark.hashing import hash_strings
 from sketch_spark.sketches import base as _base
-from sketch_spark.sketches.base import Sketch, from_bytes, make_sketch
+from sketch_spark.sketches.base import Sketch, from_bytes, make_sketch, register
 
 _STATE_SCHEMA = "name string, state binary, n_rows long, n_values long, wall_ms double"
+
+# State-name prefix of a column's id→count partial (TaskFeed.partial): no
+# SketchSpec may use it, so a partial never collides with a spec's state.
+_PARTIAL = "\0ids:"
 
 
 @dataclass
@@ -59,6 +63,8 @@ class SketchSpec:
     params: dict[str, Any] = field(default_factory=dict)
 
     def __post_init__(self) -> None:
+        if self.name.startswith(_PARTIAL):
+            raise ValueError(f"spec names starting with {_PARTIAL!r} are reserved")
         # fail fast on the driver: an invalid kind/params combination should
         # not surface as an executor-side task failure
         self.new()
@@ -119,6 +125,125 @@ def _dense_len(vals: np.ndarray) -> int:
     return top + 1 if top < DENSE_CAP else 0
 
 
+def _uint_for(top: int) -> np.dtype:
+    """The narrowest unsigned dtype holding [0, top]."""
+    for dt in (np.uint8, np.uint16, np.uint32):
+        if top <= np.iinfo(dt).max:
+            return np.dtype(dt)
+    return np.dtype(np.uint64)
+
+
+@register
+class _IdCounts(Sketch):
+    """Exact id → count map over non-negative ids: a task's counted
+    vocabulary of one column, shipped by :meth:`TaskFeed.partial` in place
+    of the pre-aggregating sketches it would have fed, under the state name
+    ``_PARTIAL + col``. Sorted unique ``ids`` with their ``counts`` (int64
+    in memory, the narrowest unsigned dtypes on the wire); merge sums counts
+    over the union — a dense add while the largest id is below DENSE_CAP,
+    which every counted id is."""
+
+    kind = "_idcounts"
+
+    def __init__(self, ids=None, counts=None):
+        self.ids = np.zeros(0, np.int64) if ids is None else ids
+        self.counts = np.zeros(0, np.int64) if counts is None else counts
+
+    @classmethod
+    def from_dense(cls, acc: np.ndarray) -> "_IdCounts":
+        ids = np.flatnonzero(acc)
+        return cls(ids, acc[ids])
+
+    def update(self, values: np.ndarray, counts: np.ndarray | None = None) -> "_IdCounts":
+        v = np.asarray(values).astype(np.int64)
+        if len(v) and v.min() < 0:
+            raise ValueError("_idcounts holds non-negative ids only")
+        ids, inv = np.unique(v, return_inverse=True)
+        c = np.zeros(len(ids), np.int64)
+        np.add.at(c, inv, 1 if counts is None else np.asarray(counts).astype(np.int64))
+        return self.merge(_IdCounts(ids, c))
+
+    def merge(self, other: "_IdCounts") -> "_IdCounts":
+        self._check_mergeable(other)
+        parts = [p for p in (self, other) if len(p.ids)]
+        top = max((int(p.ids[-1]) for p in parts), default=-1)
+        if top < DENSE_CAP:
+            acc = np.zeros(top + 1, np.int64)
+            for p in parts:
+                acc[p.ids] += p.counts  # ids are unique within a part
+            ids = np.flatnonzero(acc)
+            self.ids, self.counts = ids, acc[ids]
+        else:
+            counts = np.concatenate([p.counts for p in parts])
+            self.ids, inv = np.unique(np.concatenate([p.ids for p in parts]), return_inverse=True)
+            self.counts = np.zeros(len(self.ids), np.int64)
+            np.add.at(self.counts, inv, counts)
+        return self
+
+    def _params(self) -> dict[str, Any]:
+        return {}
+
+    def _arrays(self) -> dict[str, np.ndarray]:
+        top_id = int(self.ids[-1]) if len(self.ids) else 0
+        top_count = int(self.counts.max()) if len(self.ids) else 0
+        return {
+            "ids": self.ids.astype(_uint_for(top_id)),
+            "counts": self.counts.astype(_uint_for(top_count)),
+        }
+
+    @classmethod
+    def _from_state(cls, params, arrays) -> "_IdCounts":
+        return cls(arrays["ids"].astype(np.int64), arrays["counts"].astype(np.int64))
+
+
+def _preaggregates(spec: SketchSpec) -> bool:
+    """Whether an unweighted build may feed ``spec`` counted distinct ids."""
+    return not spec.is_quantile and bool(_base._REGISTRY[spec.kind].preaggregate)
+
+
+def _feed_counted(sk: Sketch, part: _IdCounts) -> Sketch:
+    if sk.preaggregate == "counts":
+        return sk.update(part.ids, counts=part.counts)
+    return sk.update(part.ids)
+
+
+def expand_partials(states: dict, specs: list[SketchSpec]) -> dict:
+    """Feed each id→count partial in ``states`` (``{(key, name): state}``)
+    once to its column's pre-aggregating specs — with counts for the
+    ``"counts"`` kinds — creating any sketch that no unit fed, and drop the
+    partial. The pre-aggregating kinds give the same bytes under any split
+    of their input, so this equals feeding each task's ids where they were
+    counted. Used by :meth:`TaskFeed.finish` in the task and by
+    :func:`~sketch_spark.spark.files.build_sketches_from_parquet` on the
+    merged partials."""
+    out = {k: v for k, v in states.items() if not k[1].startswith(_PARTIAL)}
+    for (key, name), part in states.items():
+        if not name.startswith(_PARTIAL):
+            continue
+        part = _as_sketch(part)
+        for s in specs:
+            if s.col == name[len(_PARTIAL):] and _preaggregates(s):
+                sk = out.get((key, s.name))
+                out[(key, s.name)] = _feed_counted(s.new() if sk is None else _as_sketch(sk), part)
+    return out
+
+
+def _nbytes(sk: Sketch) -> int:
+    """In-memory bytes of a sketch's NumPy arrays."""
+    return sum(a.nbytes for a in vars(sk).values() if isinstance(a, np.ndarray))
+
+
+def _ships(part: _IdCounts, fresh: list[Sketch]) -> bool:
+    """The size rule: a task ships its id→count partial when the partial's
+    in-memory arrays (int64 ids and counts, 16 B per distinct id) are
+    smaller than those of the fresh sketches it replaces. The driver feeds
+    the union of every task's ids serially, where the tasks would feed
+    their own ids in parallel; on the flagship specs (10.5 MB of fresh
+    tables) this rule picked the faster route on inputs from 39 k to 807 k
+    distinct ids per task (ROADMAP.md, direction 1)."""
+    return _nbytes(part) < sum(_nbytes(sk) for sk in fresh)
+
+
 def _segments(vals: np.ndarray, gid: np.ndarray | None, w: np.ndarray | None, n_groups: int):
     """(group, values, weights) for each group of a unit. Cardinality-aware:
     a stable argsort over millions of near-constant group ids is its own
@@ -153,14 +278,19 @@ class TaskFeed:
     group and weight. A segment that passes the dense gate is not fed yet
     to the specs whose kind declares ``Sketch.preaggregate``: it goes into
     one bincount accumulator per (column, key), within DENSE_CAP counters
-    per column across keys, and :meth:`finish` feeds the distinct ids once
-    (with counts for additive kinds). Everything else — float/quantile and
-    weighted specs, undeclared kinds, segments past the gate or the budget
-    — gets the raw stream in fixed UPDATE_SUPER slices: bounded transients,
-    and a slicing that is a pure function of the unit, so the
+    per column across keys. Everything else — float/quantile and weighted
+    specs, undeclared kinds, segments past the gate or the budget — gets
+    the raw stream in fixed UPDATE_SUPER slices: bounded transients, and a
+    slicing that is a pure function of the unit, so the
     batch-boundary-dependent kinds (pccm/cbf/pcbf/vac/hk) stay
-    byte-identical across re-runs and kill/resume. Both routes give the
-    same state bytes."""
+    byte-identical across re-runs and kill/resume.
+
+    Two ends. :meth:`partial` ships each (column, key) accumulator as one
+    exact id→count partial (:class:`_IdCounts`) in place of the sketches it
+    would have fed when :func:`_ships` says so, and feeds them otherwise.
+    :meth:`finish` is :meth:`partial` followed by :func:`expand_partials`,
+    which feeds the distinct ids once (with counts for additive kinds).
+    Both ends and both routes give the same final state bytes."""
 
     def __init__(self, specs: list[SketchSpec], keys=(), weight_col: str | None = None):
         self.specs = {s.name: s for s in specs}
@@ -173,11 +303,12 @@ class TaskFeed:
         self._columns: dict[tuple[str, bool], tuple[list[str], list[str]]] = {}
         for s in specs:
             pre, raw = self._columns.setdefault((s.col, s.is_quantile), ([], []))
-            eligible = weight_col is None and not s.is_quantile
-            (pre if eligible and _base._REGISTRY[s.kind].preaggregate else raw).append(s.name)
+            (pre if weight_col is None and _preaggregates(s) else raw).append(s.name)
         # (col, want_float) -> {key: accumulator}, and its counter total
         self._counts: dict[tuple[str, bool], dict[tuple, np.ndarray]] = {}
         self._held = dict.fromkeys(self._columns, 0)
+        # (column, key) pairs whose pre-aggregating sketches took raw segments
+        self._raw_pre: set[tuple] = set()
 
     def feed(self, unit) -> None:
         """Absorb one unit (an Arrow Table or RecordBatch)."""
@@ -204,9 +335,11 @@ class TaskFeed:
         pre, raw = self._columns[ck]
         direct = pre + raw
         if pre and self._count(ck, key, seg, _dense_len(seg)):
-            for name in pre:
+            for name in pre:  # held, so a keyed feed's flush_keys counts them
                 self._sketch(key, name)
             direct = raw
+        elif pre:
+            self._raw_pre.add((ck, key))
         step = _base.UPDATE_SUPER
         for name in direct:
             sk = self._sketch(key, name)
@@ -242,23 +375,40 @@ class TaskFeed:
         accs[key] = acc
         return True
 
-    def finish(self) -> dict[tuple[tuple, str], Sketch]:
-        """Feed the counted ids and return ``{(key, name): Sketch}``, leaving
-        the feed empty. With no keys every spec has a sketch, fed or not."""
-        for ck, accs in self._counts.items():
-            for key, acc in accs.items():
-                ids = np.flatnonzero(acc)
-                for name in self._columns[ck][0]:
-                    sk = self.sketches[(key, name)]
-                    if sk.preaggregate == "counts":
-                        sk.update(ids, counts=acc[ids])
-                    else:
-                        sk.update(ids)
+    def partial(self) -> dict[tuple[tuple, str], Sketch]:
+        """Return ``{(key, name): state}`` and leave the feed empty: every
+        raw-fed sketch, plus one id→count partial per counted (column, key)
+        under the name ``_PARTIAL + col`` where the size rule ships it. A
+        shipped partial replaces its key's pre-aggregating sketches unless
+        raw segments fed them too. With no keys every other spec has a
+        state, fed or not."""
         out, self.sketches = self.sketches, {}
-        self._counts.clear()
-        self._held = dict.fromkeys(self._columns, 0)
         if not self.keys:  # every spec, in spec order
             out = {((), n): out[((), n)] if ((), n) in out else s.new() for n, s in self.specs.items()}
+        for ck, accs in self._counts.items():
+            pre = self._columns[ck][0]
+            fresh = [self.specs[n].new() for n in pre]
+            for key, acc in accs.items():
+                part = _IdCounts.from_dense(acc)
+                if not _ships(part, fresh):
+                    for n in pre:
+                        _feed_counted(out[(key, n)], part)
+                    continue
+                if (ck, key) not in self._raw_pre:
+                    for n in pre:
+                        del out[(key, n)]
+                out[(key, _PARTIAL + ck[0])] = part
+        self._counts.clear()
+        self._held = dict.fromkeys(self._columns, 0)
+        self._raw_pre.clear()
+        return out
+
+    def finish(self) -> dict[tuple[tuple, str], Sketch]:
+        """Feed the counted ids and return ``{(key, name): Sketch}``, leaving
+        the feed empty. With no keys every spec has a sketch, in spec order."""
+        out = expand_partials(self.partial(), list(self.specs.values()))
+        if not self.keys:
+            out = {((), n): out[((), n)] for n in self.specs}
         return out
 
 

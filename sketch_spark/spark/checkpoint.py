@@ -44,7 +44,11 @@ def checkpointed_build(
     fail_after_files: int | None = None,
 ) -> dict[str, Sketch]:
     """Build global sketches over a parquet directory with per-file
-    checkpointing; safe to kill and re-run.
+    checkpointing; safe to kill and re-run. Each checkpoint row holds a
+    finished sketch (the task body's ``finish()``, counted ids already
+    fed): exactly one (file, name, state) row per file and spec, never an
+    id→count partial, so a checkpoint table reads like any keyed-states
+    table.
 
     ``fail_after_files`` injects a crash after K files for resume tests.
     """

@@ -14,9 +14,10 @@ Scale design: the work unit is the input file (at 100 TB, files ≫ cores, so
 Spark's scheduler balances them) or, with fewer files than cores, a
 row-group range; units are range-sliced into about one task per core, and
 per-task pyarrow runs single-threaded to avoid oversubscribing executor
-cores — Spark owns the parallelism. Each task emits one (name, state) pair
-per spec, and the pairs merge through the one log-fanout tree of
-``agg.tree_merge_states``, kilobytes per task regardless of input size.
+cores — Spark owns the parallelism. Each task emits at most one
+(name, state) pair per spec or counted column, and the pairs merge
+through the one log-fanout tree of ``agg.tree_merge_states``, kilobytes
+to a few MB per task regardless of input size.
 This is the same execution shape as the reference's MPI job
 (mpiParallelIO.cpp: chunked parallel read → local sketch → gathered merge)
 with Spark doing the scheduling, retries, and the tree correctly (the
@@ -28,14 +29,25 @@ same one the DataFrame and streaming builds use, and the grouped build
 feeds it whole unit tables. Each column is extracted and segmented by key
 once per unit. Segments whose ids all lie in [0, 2^22) (``agg.DENSE_CAP``)
 are added to one ``np.bincount`` accumulator per (column, key) — at most
-DENSE_CAP int64 counters (32 MB) per column per task across all keys —
-and at task end the distinct ids go once to every spec whose kind declares
-``Sketch.preaggregate`` (hll/dhll/bloom/minhash by set, cms with counts).
+DENSE_CAP int64 counters (32 MB) per column per task across all keys.
+Every other segment, spec and kind — including the
+batch-boundary-dependent pccm/cbf/pcbf/vac/hk — gets the raw stream.
+
+What a task does with its counted ids depends on its end. The global
+build's tasks end in ``TaskFeed.partial()``: each counted column ships as
+one exact id→count partial (sorted ids and counts at their narrowest
+dtypes) in place of the sketches whose kind declares
+``Sketch.preaggregate`` (hll/dhll/bloom/minhash by set, cms with counts),
+when the size rule says the partial is the cheaper state (see
+``TaskFeed.partial``). The partials sum in the same merge tree as every
+other state, and the driver feeds the merged distinct ids once to those
+sketches (``agg.expand_partials``). The checkpointed and grouped tasks end
+in ``finish()``, which feeds each task's distinct ids to its own sketches.
 A tokenizer vocabulary that repeats 50 k ids millions of times is hashed
-and scattered 50 k times per sketch instead of once per token. Every
-other segment, spec and kind — including the batch-boundary-dependent
-pccm/cbf/pcbf/vac/hk — gets the raw stream. Both routes give
-byte-identical states.
+and scattered 50 k times per sketch instead of once per token, and with a
+partial it is hashed once per job, not once per task. The pre-aggregating
+kinds give the same bytes under any split of their input, so every end
+and route gives byte-identical final states.
 
 The DataFrame path (`sketch_spark.spark.agg`) remains the general route for
 sketching *derived* DataFrames (post-filter/join/column-expr); this module
@@ -56,6 +68,7 @@ from sketch_spark.spark.agg import (
     SketchSpec,
     TaskFeed,
     _keyed_partial,
+    expand_partials,
     merge_keyed_states,
     tree_merge_states,
 )
@@ -88,12 +101,12 @@ def _read_unit(unit: tuple, cols: list[str]) -> pa.Table:
         return pf.read_row_groups(list(range(rg_lo, rg_hi)), columns=cols, use_threads=False)
 
 
-def _build_states_for_units(
+def _feed_units(
     units: Iterable[tuple], specs: list[SketchSpec], row_filter=None, extra_columns=()
-) -> Iterator[tuple[str, bytes]]:
-    """Task body: read the needed columns of each work unit, feed one
-    :class:`~sketch_spark.spark.agg.TaskFeed`, emit one (name, state bytes)
-    pair per spec — nothing when there were no units."""
+) -> TaskFeed | None:
+    """Task body: read the needed columns of each work unit and feed them
+    to one :class:`~sketch_spark.spark.agg.TaskFeed`; None when there were
+    no units. The caller picks the end: ``partial()`` or ``finish()``."""
     task = TaskFeed(specs)
     cols = sorted({s.col for s in specs} | set(extra_columns))
     any_unit = False
@@ -103,8 +116,22 @@ def _build_states_for_units(
         if row_filter is not None:
             table = row_filter(table)
         task.feed(table)
-    if any_unit:
-        for (_, name), sk in task.finish().items():
+    return task if any_unit else None
+
+
+def _build_states_for_units(
+    units: Iterable[tuple],
+    specs: list[SketchSpec],
+    row_filter=None,
+    extra_columns=(),
+    end=TaskFeed.finish,
+) -> Iterator[tuple[str, bytes]]:
+    """The (name, state bytes) pairs of the fed task's ``end`` — one
+    finished state per spec by default, or :meth:`TaskFeed.partial`'s
+    states — and nothing when there were no units."""
+    task = _feed_units(units, specs, row_filter, extra_columns)
+    if task is not None:
+        for (_, name), sk in end(task).items():
             yield name, sk.to_bytes()
 
 
@@ -270,9 +297,15 @@ def build_sketches_from_parquet(
     """Whole-table sketch build, parquet-direct: the input files are
     planned into work units (whole files, or row-group ranges when there
     are fewer files than cores), the units are range-sliced into about one
-    Spark task per core, each task folds its units into one
-    (name, state) pair per spec, and the pairs go through the same merge
-    tree as :func:`~sketch_spark.spark.agg.tree_merge_states`.
+    Spark task per core, and each task feeds its units to one
+    :class:`~sketch_spark.spark.agg.TaskFeed` and ships its
+    ``partial()``: a state per raw-fed spec plus, per counted column, an
+    exact id→count partial in place of the pre-aggregating sketches when
+    that is smaller. The states go through the merge tree of
+    :func:`~sketch_spark.spark.agg.tree_merge_states`, the partials summing
+    like any other state, and the driver feeds the merged counts once to
+    their columns' specs (:func:`~sketch_spark.spark.agg.expand_partials`).
+    Returns one sketch per spec name, byte-identical to a finished build.
 
     ``row_filter``: optional ``pa.Table -> pa.Table`` applied per unit (the
     pushdown hook for simple predicates; must be deterministic).
@@ -283,9 +316,8 @@ def build_sketches_from_parquet(
     # fewer files than cores → row-group splitting keeps the scan full-width
     units = _plan_units(files, spark.sparkContext.defaultParallelism)
     pairs = spark.sparkContext.parallelize(units, _n_slices(spark, len(units))).mapPartitions(
-        lambda part: _build_states_for_units(part, specs, row_filter, extra_columns)
+        lambda part: _build_states_for_units(part, specs, row_filter, extra_columns, TaskFeed.partial)
     )
-    out = tree_merge_states(pairs)
-    for s in specs:
-        out.setdefault(s.name, s.new())
-    return out
+    merged = tree_merge_states(pairs)
+    out = expand_partials({((), n): st for n, st in merged.items()}, specs)
+    return {s.name: out[((), s.name)] if ((), s.name) in out else s.new() for s in specs}

@@ -6,11 +6,16 @@ run. Reference analog: serialization round-trip guarantee
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 
-from sketch_spark.spark.agg import SketchSpec
+from sketch_spark.spark.agg import _PARTIAL, SketchSpec, TaskFeed
 from sketch_spark.spark.checkpoint import checkpointed_build, lineage_report
-from sketch_spark.spark.files import build_sketches_from_parquet
+from sketch_spark.spark.files import (
+    _build_states_for_units,
+    build_sketches_from_parquet,
+    list_parquet_files,
+)
 
 SPECS = [
     SketchSpec("h", "hll", "tokens", {"p": 12}),
@@ -97,12 +102,35 @@ def test_changed_spec_set_raises(spark, fixtures, ckpt_dir):
         checkpointed_build(spark, input_path, SPECS[1:2], ckpt_dir)
 
 
+# every kind that declares pre-aggregation beyond SPECS' hll and cms
+PRE_SPECS = [
+    SketchSpec("d", "dhll", "tokens", {"p": 10}),
+    SketchSpec("b", "bloom", "tokens", {"l2sz": 20, "nh": 3}),
+    SketchSpec("m", "minhash", "tokens", {"k": 128}),
+]
+
+
 def test_states_match_the_parquet_direct_build(spark, fixtures, ckpt_dir):
     """Per-file checkpoint states fold to the parquet-direct build's bytes
-    for every kind the merge-law tests show is partition-invariant."""
+    for every kind the merge-law tests show is partition-invariant. On the
+    zipf table the parquet-direct tasks ship id->count partials, which the
+    driver expands, while each checkpoint row holds a finished sketch."""
     d, _ = fixtures
-    input_path = os.path.join(d, "uniform")
-    ckpt = checkpointed_build(spark, input_path, SPECS, ckpt_dir)
-    direct = build_sketches_from_parquet(spark, input_path, SPECS)
-    for name in ("h", "c", "s", "y", "p"):
-        assert ckpt[name].to_bytes() == direct[name].to_bytes(), name
+    specs = SPECS + PRE_SPECS
+    for table in ("uniform", "zipf"):
+        input_path = os.path.join(d, table)
+        files = list_parquet_files(input_path)
+        # one parquet-direct task's share of the files
+        share = [(f, None, None) for f in files[: len(files) // spark.sparkContext.defaultParallelism]]
+        shipped = {n for n, _ in _build_states_for_units(share, specs, end=TaskFeed.partial)}
+        assert (_PARTIAL + "tokens" in shipped) == (table == "zipf")
+        table_dir = os.path.join(ckpt_dir, table)
+        ckpt = checkpointed_build(spark, input_path, specs, table_dir)
+        rows = pq.read_table(table_dir, columns=["file", "name"]).to_pylist()
+        assert len(rows) == len(files) * len(specs)
+        assert {(r["file"], r["name"]) for r in rows} == {
+            (os.path.abspath(f), s.name) for f in files for s in specs
+        }
+        direct = build_sketches_from_parquet(spark, input_path, specs)
+        for name in ("h", "c", "s", "y", "p", "d", "b", "m"):
+            assert ckpt[name].to_bytes() == direct[name].to_bytes(), (table, name)

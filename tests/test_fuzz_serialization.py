@@ -50,6 +50,8 @@ def _to_zlib(buf: bytes) -> bytes:
 
 
 PARAM_STRATEGIES = {
+    # the private id->count partial of the parquet-direct global build
+    "_idcounts": st.just({}),
     "hll": st.fixed_dictionaries({"p": st.integers(4, 14)}),
     "bloom": st.fixed_dictionaries({"l2sz": st.integers(6, 18), "nh": st.integers(1, 6)}),
     "cms": st.fixed_dictionaries({"l2sz": st.integers(4, 14), "nh": st.integers(1, 6)}),

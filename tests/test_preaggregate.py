@@ -18,15 +18,18 @@ import sketch_spark.sketches.base as base_mod
 from sketch_spark.sketches.base import _REGISTRY, from_bytes, make_sketch, merge_all
 from sketch_spark.spark import agg
 from sketch_spark.spark.agg import (
+    _PARTIAL,
     DENSE_CAP,
     SketchSpec,
     TaskFeed,
     _as_bytes,
+    _IdCounts,
     _dense_len,
     _extract_column,
     _fold_partition,
     _keyed_partial,
     build_sketches,
+    expand_partials,
     fold_states,
     sketch_by_key,
 )
@@ -149,11 +152,27 @@ def dense_spy(monkeypatch):
     return calls
 
 
+def _expanded(pairs, specs):
+    """The driver's end of a parquet-direct build over (name, state) pairs:
+    fold, then feed the merged partials to their columns' specs."""
+    merged = {((), n): st for n, st in fold_states(pairs).items()}
+    return {name: _as_bytes(st) for (_, name), st in expand_partials(merged, specs).items()}
+
+
 def _check(units, dense_spy, specs=SPECS, row_filter=None):
+    """Both ends of the task body — finished states, and partials expanded
+    as the driver does — give the raw feed's bytes."""
     pairs = list(_build_states_for_units(units, specs, row_filter))
     states = dict(pairs)
     assert len(pairs) == len(states) == len(specs)  # one state per spec
-    assert states == _raw_states(units, specs, row_filter)
+    raw = _raw_states(units, specs, row_filter)
+    assert states == raw
+    counted = list(dense_spy)
+    partial = list(_build_states_for_units(units, specs, row_filter, end=TaskFeed.partial))
+    assert dense_spy[len(counted):] == counted  # the same units were counted
+    del dense_spy[len(counted):]
+    assert len(partial) == len(dict(partial))  # one state per name
+    assert _expanded(partial, specs) == raw
     return states
 
 
@@ -290,6 +309,128 @@ def test_spark_builds_match_a_raw_local_build(spark, fixtures):
     local = _raw_states([(f, None, None) for f in list_parquet_files(path)], specs)
     for s in specs:
         assert via_files[s.name].to_bytes() == via_df[s.name].to_bytes() == local[s.name]
+
+
+# ---- id->count partials (TaskFeed.partial) --------------------------------
+
+def _idcounts(ids):
+    return _IdCounts().update(np.asarray(ids, dtype=np.int64))
+
+
+def test_partial_merge_laws():
+    a, b, c = (_idcounts(_zipf_ids(5_000, 3_000, seed=s)) for s in (20, 21, 22))
+    ab_c = _idcounts([]).merge(a).merge(b).merge(c)
+    a_bc = a.copy().merge(b.copy().merge(c))
+    assert ab_c.to_bytes() == a_bc.to_bytes()  # associative
+    assert a.copy().merge(b).to_bytes() == b.copy().merge(a).to_bytes()  # commutative
+    assert a.copy().merge(_idcounts([])).to_bytes() == a.to_bytes()  # empty identity
+    assert _idcounts([]).merge(a).to_bytes() == a.to_bytes()
+    # an exact sum: the merged map is the bincount of the three streams
+    every = np.concatenate([_zipf_ids(5_000, 3_000, seed=s) for s in (20, 21, 22)])
+    acc = np.bincount(every)
+    assert np.array_equal(ab_c.ids, np.flatnonzero(acc))
+    assert np.array_equal(ab_c.counts, acc[ab_c.ids])
+
+
+def test_partial_wire_round_trip_at_wide_ids_and_counts():
+    ids = np.array([0, 7, 2**31 - 2, 2**31 + 5], dtype=np.int64)
+    counts = np.array([1, 2**33, 3, 2**40 + 1], dtype=np.int64)
+    part = _IdCounts(ids, counts)
+    blob = part.to_bytes()
+    back = from_bytes(blob)
+    assert isinstance(back, _IdCounts) and back.to_bytes() == blob
+    assert back.ids.dtype == back.counts.dtype == np.int64
+    assert np.array_equal(back.ids, ids) and np.array_equal(back.counts, counts)
+    assert {k: a.dtype for k, a in part._arrays().items()} == {
+        "ids": np.uint32, "counts": np.uint64,
+    }
+    # a merge past DENSE_CAP takes the sparse union and stays exact
+    both = back.merge(_IdCounts(ids[1:2], counts[1:2]))
+    assert np.array_equal(both.counts, counts * np.array([1, 2, 1, 1]))
+
+
+def test_partial_rejects_negative_ids():
+    with pytest.raises(ValueError, match="non-negative"):
+        _idcounts([3, -1])
+
+
+@pytest.fixture(params=["ship", "feed"])
+def route(request, monkeypatch):
+    """Forces the size rule: "ship" always ships the partial, "feed" never."""
+    ship = request.param == "ship"
+    monkeypatch.setattr(agg, "_ships", lambda part, fresh: ship)
+    return request.param
+
+
+def test_both_routes_give_the_raw_bytes_for_every_preaggregate_kind(fixtures, route):
+    path = os.path.join(fixtures[0], "zipf")
+    files = list_parquet_files(path)
+    specs = GROUPED_SPECS + [SketchSpec("k", "kll", "n_tok", {"k": 64})]
+    tasks = [[(f, None, None) for f in files[t::3]] for t in range(3)]
+    pairs = []
+    for units in tasks:
+        shipped = list(_build_states_for_units(units, specs, end=TaskFeed.partial))
+        names = [n for n, _ in shipped]
+        if route == "ship":
+            assert names == ["k", _PARTIAL + "tokens"]
+        else:
+            assert names == [s.name for s in specs]
+        pairs += shipped
+    got = _expanded(pairs, specs)
+    assert sorted(got) == sorted(s.name for s in specs)
+    # kll rides along raw-fed; its bytes depend on the task split
+    local = _raw_states([u for units in tasks for u in units], GROUPED_SPECS)
+    assert {n: got[n] for n in local} == local
+
+
+def test_raw_fed_sketch_and_partial_ship_from_one_task(tmp_path, dense_spy):
+    """A sparse unit feeds the counted column's sketches raw; the dense
+    units' partial ships beside them and expands to the raw-fed bytes."""
+    rng = np.random.default_rng(23)
+    dense = _write(tmp_path / "a.parquet", _docs(_zipf_ids(6_000, 2_000, seed=24)))
+    sparse = _write(tmp_path / "b.parquet", _docs(rng.integers(0, 2**40, 3_000)))
+    units = [(dense, None, None), (sparse, None, None)]
+    specs = [s for s in SPECS if s.name in ("h", "c", "b", "k")]
+    shipped = dict(_build_states_for_units(units, specs, end=TaskFeed.partial))
+    assert sorted(shipped) == sorted(["h", "c", "b", "k", _PARTIAL + "tokens"])
+    assert from_bytes(shipped["h"]).estimate() > 0  # the raw-fed part
+    assert _expanded(shipped.items(), specs) == _raw_states(units, specs)
+    assert len(dense_spy) == 1
+
+
+def test_kll_only_feed_ships_no_partial(tmp_path):
+    f = _write(tmp_path / "a.parquet", _docs(_zipf_ids(3_000, 500, seed=25)))
+    specs = [SketchSpec("k", "kll", "n_tok", {"k": 64}), SketchSpec("t", "kll", "tokens", {"k": 64})]
+    feed = TaskFeed(specs)
+    feed.feed(pq.read_table(f))
+    assert feed._counts == {}
+    assert list(feed.partial()) == [((), "k"), ((), "t")]
+
+
+def test_size_rule_keeps_sketches_when_the_partial_is_larger(tmp_path):
+    """4 000 distinct ids (64 KB in memory) ship in place of a 128 KB CMS,
+    not of a 256 B HLL."""
+    f = _write(tmp_path / "a.parquet", _docs(np.arange(4_000)))
+    feed = TaskFeed([SketchSpec("h", "hll", "tokens", {"p": 8})])
+    feed.feed(pq.read_table(f))
+    assert list(feed.partial()) == [((), "h")]
+    feed = TaskFeed([SketchSpec("c", "cms", "tokens", {"l2sz": 12, "nh": 4})])
+    feed.feed(pq.read_table(f))
+    assert list(feed.partial()) == [((), _PARTIAL + "tokens")]
+
+
+def test_spec_rejects_the_reserved_name():
+    with pytest.raises(ValueError, match="reserved"):
+        SketchSpec(_PARTIAL + "tokens", "hll", "tokens")
+
+
+def test_parquet_build_returns_exactly_the_spec_names(spark, fixtures):
+    path = os.path.join(fixtures[0], "zipf")
+    specs = GROUPED_SPECS + [SketchSpec("k", "kll", "n_tok", {"k": 64})]
+    out = build_sketches_from_parquet(spark, path, specs)
+    assert list(out) == [s.name for s in specs]
+    local = _raw_states([(f, None, None) for f in list_parquet_files(path)], specs[:-1])
+    assert {n: sk.to_bytes() for n, sk in out.items() if n != "k"} == local
 
 
 # ---- grouped builds --------------------------------------------------------

@@ -295,6 +295,37 @@ def test_threshold_distinct_skew_shuffles_pairs_not_rows(spark):
     assert abs(est - 1.0) < 0.5
 
 
+def test_threshold_distinct_sketch_of_empty_input_is_empty_hll(spark):
+    from sketch_spark.spark.filterhll import threshold_distinct_sketch
+
+    df = spark.createDataFrame([], "v long")
+    out = threshold_distinct_sketch(df, "v", 2, p=9)
+    assert out.to_bytes() == make_sketch("hll", p=9).to_bytes()
+
+
+# sha256 of the state the collect-and-merge loop that agg.fold_states
+# replaced returned on the fixture below
+_THRESHOLD_HLL_SHA256 = "0d42b4b87c097be6b7c8a55c3e5e5841503a980b4e4c0fee71cf8649410fe19d"
+
+
+def test_threshold_distinct_sketch_bytes_unchanged(spark):
+    """The folded result equals a direct HLL over the values that reach the
+    threshold (the CMS is wide enough to be exact here) and the bytes the
+    earlier merge loop produced."""
+    import hashlib
+
+    from sketch_spark.spark.filterhll import threshold_distinct_sketch
+
+    rows = [(v * 7919,) for v in range(3000) for _ in range(v % 7 + 1)]
+    df = spark.createDataFrame(rows, "v long").repartition(8)
+    out = threshold_distinct_sketch(df, "v", 4, p=12, l2sz=18)
+    want = make_sketch("hll", p=12).update(
+        np.array([v * 7919 for v in range(3000) if v % 7 + 1 >= 4], dtype=np.int64)
+    )
+    assert out.to_bytes() == want.to_bytes()
+    assert hashlib.sha256(out.to_bytes()).hexdigest() == _THRESHOLD_HLL_SHA256
+
+
 def test_threshold_distinct_threshold_one_equals_hll(spark):
     from sketch_spark.spark.filterhll import threshold_distinct
 
