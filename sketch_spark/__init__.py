@@ -24,7 +24,7 @@ from sketch_spark import mem as _mem
 # it would tax every fresh buffer ~40x. See sketch_spark/mem.py.
 _mem.tune()
 
-from sketch_spark.spark.session import skip_unchanged_zip_rereads
+from sketch_spark.spark.session import freeze_worker_heap, skip_unchanged_zip_rereads
 
 # PySpark's worker calls importlib.invalidate_caches() before every task,
 # which re-reads pyspark.zip and Spark's core jar: 0.1-0.3 s per task. Re-read
@@ -80,3 +80,8 @@ from sketch_spark.spark import (  # noqa: F401
 )
 
 __version__ = "0.1.0"
+
+# Spark's worker daemon runs a full gc.collect() after every task in a reused
+# worker, which walks this import heap: 32-70 ms per task. Freeze it once, in
+# forked workers only. See spark/session.py.
+freeze_worker_heap()

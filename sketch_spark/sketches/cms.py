@@ -193,12 +193,18 @@ class CountMinSketch(_TableSketch):
         buffers stay O(SUPER) however large the batch, and the extra table
         passes cost ≤ one w-length add per row per 2M values. Same indices
         → same integer bincounts → byte-identical tables under any layout
-        or split (see SUPER). Weighted updates stay whole-batch."""
+        or split (see SUPER). Weighted updates stay whole-batch: integer
+        counts (pre-aggregated ids) scatter with ``np.add.at`` on int64,
+        O(ids) rather than O(w) per row; float counts keep the per-cell
+        float64 ``bincount`` sum, then truncation. Integer cell sums below
+        2^53 are exact in float64, so both give the same bytes."""
         if len(values) == 0:
             return self
         mask = _U64(self.w - 1)
         if counts is not None:
-            c = np.asarray(counts, dtype=np.float64)
+            c = np.asarray(counts)
+            scatter = c.dtype.kind in "iu"
+            c = c.astype(np.int64 if scatter else np.float64, copy=False)
             u = _u64_vals(values)
             rows = [np.empty(len(u), dtype=np.int32) for _ in range(self.nh)]
             with np.errstate(over="ignore"):
@@ -207,9 +213,12 @@ class CountMinSketch(_TableSketch):
                     for r in range(self.nh):
                         rows[r][i : i + hs.shape[1]] = (hs[r] & mask).astype(np.int32)
             for r in range(self.nh):
-                self.table[r] += np.bincount(rows[r], weights=c, minlength=self.w).astype(
-                    self.dtype
-                )
+                if scatter:
+                    np.add.at(self.table[r], rows[r], c)
+                else:
+                    self.table[r] += np.bincount(rows[r], weights=c, minlength=self.w).astype(
+                        self.dtype
+                    )
             return self
         v = np.asarray(values)
         rows = [np.empty(min(len(v), SUPER), dtype=np.int32) for _ in range(self.nh)]

@@ -81,28 +81,38 @@ def _is_list(t: pa.DataType) -> bool:
     return pa.types.is_list(t) or pa.types.is_large_list(t)
 
 
-def _extract_from_array(arr, want_float: bool) -> np.ndarray:
-    """Flatten one Arrow array/chunked-array to a contiguous NumPy batch.
+def _extract_kept(arr, want_float: bool) -> tuple[np.ndarray, np.ndarray | None]:
+    """Flatten one Arrow array/chunked-array to a contiguous NumPy batch,
+    skipping nulls (Spark's ``approx_count_distinct`` semantics).
 
-    array<int*> → flattened element values; string → FNV64+WangHash ids;
-    numeric → direct (cast to float64 for quantile sketches, uint64 ids
-    otherwise).
+    array<…> → flattened element values (a null row has none); string →
+    FNV64+WangHash ids; numeric → direct (cast to float64 for quantile
+    sketches, uint64 ids otherwise). Also returns the mask of the flattened
+    positions kept, or None when nothing was null (no pass over the data),
+    so a caller can drop the same positions from values it aligned to them.
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     if _is_list(arr.type):
-        flat = arr.flatten()
-        vals = flat.to_numpy(zero_copy_only=False)
-    elif pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
-        return hash_strings(arr.to_numpy(zero_copy_only=False))
-    else:
-        vals = arr.to_numpy(zero_copy_only=False)
+        arr = arr.flatten()
+    kept = None
+    if arr.null_count:
+        kept = arr.is_valid().to_numpy(zero_copy_only=False)
+        arr = arr.drop_null()
+    if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
+        return hash_strings(arr.to_numpy(zero_copy_only=False)), kept
+    vals = arr.to_numpy(zero_copy_only=False)
     if want_float:
-        return np.asarray(vals, dtype=np.float64)
+        return np.asarray(vals, dtype=np.float64), kept
     v = np.asarray(vals)
     if v.dtype.kind == "f":
         v = v.astype(np.int64)
-    return v
+    return v, kept
+
+
+def _extract_from_array(arr, want_float: bool) -> np.ndarray:
+    """:func:`_extract_kept`'s values alone."""
+    return _extract_kept(arr, want_float)[0]
 
 
 def _extract_column(batch: pa.RecordBatch, col: str, want_float: bool) -> np.ndarray:
@@ -316,17 +326,23 @@ class TaskFeed:
             gid, groups, self.key_types = _encode_keys(unit, self.keys)
         else:
             gid, groups = None, [()]
-        w = None if self.weight_col is None else _extract_column(unit, self.weight_col, True)
+        w = None
+        if self.weight_col is not None:  # one per row, nulls kept (as NaN) for alignment
+            w = np.asarray(unit.column(self.weight_col).to_numpy(zero_copy_only=False), np.float64)
         for ck, (pre, raw) in self._columns.items():
             arr = unit.column(unit.schema.get_field_index(ck[0]))
-            vals = _extract_from_array(arr, ck[1])
+            vals, kept = _extract_kept(arr, ck[1])
             for name in pre + raw:
                 self.n_values[name] += len(vals)
             g, wv = gid, w
-            if (len(groups) > 1 or w is not None) and _is_list(arr.type):
-                lens = pc.list_value_length(arr).fill_null(0).to_numpy()
-                g = None if gid is None else np.repeat(gid, lens)
-                wv = None if w is None else np.repeat(w, lens)
+            if len(groups) > 1 or w is not None:
+                if _is_list(arr.type):
+                    lens = pc.list_value_length(arr).fill_null(0).to_numpy()
+                    g = None if gid is None else np.repeat(gid, lens)
+                    wv = None if w is None else np.repeat(w, lens)
+                if kept is not None:
+                    g = None if g is None else g[kept]
+                    wv = None if wv is None else wv[kept]
             for gi, seg, segw in _segments(vals, g, wv, len(groups)):
                 if len(seg):
                     self._feed_segment(ck, groups[gi], seg, segw)

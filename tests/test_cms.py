@@ -383,9 +383,18 @@ def test_super_chunked_accumulation_bit_identical(monkeypatch):
         monkeypatch.setattr(cms_mod, "SUPER", 1000)  # 4 passes + remainder
         split = cls(l2sz=10, nh=4).update(vals)
         assert split.to_bytes() == whole.to_bytes(), cls.kind
-        # weighted path (whole-batch) unaffected by the SUPER setting
-        w = rng.integers(1, 9, size=100).astype(np.float64)
-        a = cls(l2sz=10, nh=4).update(vals[:100], counts=w)
-        monkeypatch.setattr(cms_mod, "SUPER", 1 << 30)
-        b = cls(l2sz=10, nh=4).update(vals[:100], counts=w)
-        assert a.to_bytes() == b.to_bytes(), cls.kind
+        # weighted path (whole-batch) unaffected by the SUPER setting; for
+        # cms, integer counts (cell sums past 2^31 on repeated ids) scatter
+        # in int64 and must give the float-weight path's bytes
+        for w in (
+            rng.integers(1, 9, size=100).astype(np.float64),
+            rng.integers(2**31, 2**33, size=100),
+        ):
+            monkeypatch.setattr(cms_mod, "SUPER", 1000)
+            a = cls(l2sz=10, nh=4).update(vals[:100] % 7, counts=w)
+            monkeypatch.setattr(cms_mod, "SUPER", 1 << 30)
+            b = cls(l2sz=10, nh=4).update(vals[:100] % 7, counts=w)
+            assert a.to_bytes() == b.to_bytes(), cls.kind
+            f = cls(l2sz=10, nh=4).update(vals[:100] % 7, counts=w.astype(np.float64))
+            assert a.to_bytes() == f.to_bytes(), cls.kind
+        assert CountMinSketch(l2sz=10, nh=4).update(vals[:100] % 7, counts=w).total() == w.sum()

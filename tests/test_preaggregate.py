@@ -207,17 +207,17 @@ def test_dense_cap_boundary(tmp_path, dense_spy):
     assert len(feed._counts[("tokens", False)][()]) == DENSE_CAP
 
 
-@pytest.mark.filterwarnings("ignore:invalid value encountered in cast")
-def test_null_list_element_keeps_todays_state(tmp_path, dense_spy):
-    """A null element extracts to the INT64_MIN sentinel: the unit fails
-    the gate and its state is whatever the raw feed makes of it."""
-    docs = _docs(_zipf_ids(3_000, 700, seed=7).astype(np.int64))
+def test_null_list_element_is_skipped(tmp_path, dense_spy):
+    """A null element is skipped at extraction: the unit still passes the
+    gate, and every state is the raw feed's over the other ids."""
+    ids = _zipf_ids(3_000, 700, seed=7).astype(np.int64)
+    docs = _docs(ids)
     docs[3][5] = None
     with_null = _write(tmp_path / "null.parquet", docs)
     vals = _extract_column(pq.read_table(with_null, columns=["tokens"]), "tokens", False)
-    assert vals.min() == np.iinfo(np.int64).min
+    assert len(vals) == len(ids) - 1 and vals.min() >= 0
     _check([(with_null, None, None)], dense_spy)
-    assert dense_spy == []
+    assert [n for _, n in dense_spy] == [len(ids) - 1]
 
 
 def test_string_and_int32_columns(tmp_path, dense_spy):

@@ -1,12 +1,20 @@
-"""Zip import index re-reads (``session.skip_unchanged_zip_rereads``).
+"""Per-task Python worker costs that importing ``sketch_spark`` removes.
 
-PySpark's worker calls ``importlib.invalidate_caches()`` before every task;
-on CPython 3.11 each call made every cached ``zipimporter`` re-read its
-archive's central directory. Importing ``sketch_spark`` installs a wrapper
-that re-reads only when the archive's ``(st_mtime_ns, st_size)`` changed.
+Zip import index re-reads (``session.skip_unchanged_zip_rereads``): PySpark's
+worker calls ``importlib.invalidate_caches()`` before every task; on CPython
+3.11 each call made every cached ``zipimporter`` re-read its archive's
+central directory. Importing ``sketch_spark`` installs a wrapper that
+re-reads only when the archive's ``(st_mtime_ns, st_size)`` changed.
+
+The worker heap freeze (``session.freeze_worker_heap``): Spark's worker
+daemon runs a full ``gc.collect()`` after every task in a reused worker;
+importing ``sketch_spark`` in a daemon-forked worker freezes the import heap
+once, so that collection no longer walks it. Other processes are untouched.
 """
 
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -127,3 +135,63 @@ def test_warm_executor_worker_reads_no_zip_directory(spark):
     # the workers do import from zips (pyspark.zip, py4j, Spark's core jar)
     assert all(zips > 0 for _, zips in got)
     assert [reads for reads, _ in got] == [0] * n
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _python(code):
+    """stdout of ``code`` run by a fresh interpreter that can import the
+    package."""
+    env = dict(os.environ, PYTHONPATH=REPO)
+    return subprocess.run(
+        [sys.executable, "-c", code], env=env, check=True, capture_output=True, text=True
+    ).stdout.split()
+
+
+def test_driver_heap_is_not_frozen():
+    assert _python("import sketch_spark, gc; print(gc.get_freeze_count())") == ["0"]
+
+
+def test_daemon_worker_freezes_once():
+    # a process whose __main__ is pyspark.daemon, as in a forked worker
+    got = _python(
+        "import gc, sys, types\n"
+        "sys.modules['__main__'].__spec__ = types.SimpleNamespace(name='pyspark.daemon')\n"
+        "import sketch_spark\n"
+        "from sketch_spark.spark.session import freeze_worker_heap\n"
+        "first = gc.get_freeze_count()\n"
+        "freeze_worker_heap()\n"
+        "print(first, gc.get_freeze_count(), 'pyarrow.parquet' in sys.modules)"
+    )
+    assert int(got[0]) > 0 and got[1] == got[0] and got[2] == "True"
+
+
+def test_warm_executor_worker_heap_is_frozen(spark):
+    sc = spark.sparkContext
+
+    def import_package(it):
+        import sketch_spark  # noqa: F401
+
+        yield 1
+
+    def gc_probe(it):
+        import gc
+
+        from sketch_spark.spark.session import freeze_worker_heap
+
+        frozen, live = gc.get_freeze_count(), len(gc.get_objects())
+        freeze_worker_heap()
+        yield frozen, live, gc.get_freeze_count()
+
+    # every pooled worker imports the package (see the zip test above)
+    n = sc.defaultParallelism
+    warm = sc.parallelize(range(8 * n), 8 * n).mapPartitions(import_package)
+    assert sum(warm.collect()) == 8 * n
+    got = sc.parallelize(range(n), n).mapPartitions(gc_probe).collect()
+    assert len(got) == n
+    for frozen, live, again in got:
+        assert frozen > 0
+        # what the per-task gc.collect() still walks: the probe task itself
+        assert live < frozen / 100
+        assert again == frozen  # a second call freezes nothing new

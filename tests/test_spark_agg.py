@@ -559,3 +559,49 @@ def test_rollup_states_rejects_non_states_table(spark):
     df = spark.createDataFrame([(1, "a")], "k int, v string")
     with pytest.raises(ValueError, match="keyed-states table"):
         rollup_states(df, ["k"])
+
+
+# ---- nulls are skipped at extraction (Spark's approx_count_distinct) -------
+
+
+def test_null_ids_are_skipped():
+    import pyarrow as pa
+
+    nulls = pa.table({"v": pa.array([None] * 1000, pa.int64())})
+    feed = agg_mod.TaskFeed([SketchSpec("h", "hll", "v", {"p": 12})])
+    feed.feed(nulls)
+    assert feed.finish()[((), "h")].estimate() == 0.0
+    assert len(agg_mod._extract_column(nulls, "v", False)) == 0
+
+
+def test_null_strings_are_skipped():
+    import pyarrow as pa
+
+    vals, kept = agg_mod._extract_kept(pa.array(["a", None, "b"]), False)
+    assert kept.tolist() == [True, False, True]
+    assert len(vals) == 2
+    assert round(make_sketch("hll", p=12).update(vals).estimate()) == 2
+
+
+def test_null_list_elements_and_rows_keep_groups_and_weights_aligned(spark):
+    """Nulls inside a list and null list rows are skipped; the group ids
+    and weights repeated over the tokens drop the same positions."""
+    df = spark.createDataFrame(
+        [("a", [1, None, 2], 5), ("a", None, 7), ("b", [3], 2), ("b", [None], 9)],
+        "src string, toks array<bigint>, w bigint",
+    )
+    hll = [SketchSpec("h", "hll", "toks", {"p": 12})]
+    est = {
+        r["src"]: from_bytes(bytes(r["state"])).estimate()
+        for r in sketch_by_key(df, "src", hll).collect()
+    }
+    assert {k: round(v) for k, v in est.items()} == {"a": 2, "b": 1}
+    cms = [SketchSpec("c", "cms", "toks", {"l2sz": 10, "nh": 3})]
+    out = {
+        r["src"]: from_bytes(bytes(r["state"]))
+        for r in sketch_by_key(df, "src", cms, weight_col="w").collect()
+    }
+    want_a = make_sketch("cms", l2sz=10, nh=3).update(np.array([1, 2]), counts=np.array([5, 5]))
+    want_b = make_sketch("cms", l2sz=10, nh=3).update(np.array([3]), counts=np.array([2]))
+    assert out["a"].to_bytes() == want_a.to_bytes()
+    assert out["b"].to_bytes() == want_b.to_bytes()
