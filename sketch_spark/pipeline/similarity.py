@@ -20,17 +20,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from sketch_spark.pipeline.buckets import guarded_bucket_pairs
-
-
-def _batch_matrix(arr: pa.Array) -> np.ndarray:
-    """(n, d) float32 matrix from an Arrow list<float> column (zero-copy
-    flatten; assumes fixed dimension, validated)."""
-    lens = np.diff(arr.offsets.to_numpy(zero_copy_only=False))
-    d = int(lens[0]) if len(lens) else 0
-    if len(lens) and not (lens == d).all():
-        raise ValueError("ragged embedding column")
-    flat = arr.flatten().to_numpy(zero_copy_only=False)
-    return flat.reshape(-1, d) if d else flat.reshape(0, 0)
+from sketch_spark.spark.agg import SketchSpec, _batch_matrix, sketch_by_key
 
 
 def brute_force_topk(
@@ -479,54 +469,13 @@ def tensor_moments_by_key(
     rows (Pham & Pagh FFT tensor sketch — the reference's rnla.h:26-31
     TODO, working in sketches/rnla.py).
 
-    Same two-phase shape as ``sketch_by_key``: map-side per-key partials
-    built batch-vectorized in NumPy (one BLAS matmul + FFT set per batch,
-    no per-row Python), then ONE shuffle of kilobyte states merged by
+    This is ``sketch_by_key`` with one ``tensorsketch`` spec: map-side
+    per-key partials from the keyed ``TaskFeed``, which hands the kind
+    each key's rows as one (n, d) matrix per batch (one BLAS matmul + FFT
+    set, no per-row Python), then ONE shuffle of kilobyte states merged by
     linearity. The result answers polynomial-kernel Gram energies between
     any two keys (``ts_a.dot(ts_b) ≈ Σᵢⱼ⟨xᵢ,yⱼ⟩^degree``) without ever
     materializing a pairwise join — the 100 TB shape for cross-corpus
     second-moment comparison."""
-    from sketch_spark.sketches.rnla import TensorSketch
-    from sketch_spark.spark.agg import merge_keyed_states
-
-    key_type = dict(df.dtypes)[key]
-
-    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # _encode_keys (the sketch_by_key encoder) keeps native key types
-        # AND gives null keys their own group — matching the grouped-build
-        # contract (a hand-rolled dictionary encode here once cast null
-        # indices to INT64_MIN and silently dropped those rows)
-        from sketch_spark.spark.agg import _encode_keys
-
-        acc: dict = {}
-        key_arrow_type = None
-        for batch in batches:
-            inv, uniq, (key_arrow_type,) = _encode_keys(batch, [key])
-            m = _batch_matrix(batch.column(batch.schema.get_field_index(vec_col)))
-            if m.shape[0] == 0:
-                continue
-            for gi, (kval,) in enumerate(uniq):
-                rows = m[inv == gi]
-                if len(rows) == 0:
-                    continue
-                sk = acc.get(kval)
-                if sk is None:
-                    sk = acc[kval] = TensorSketch(
-                        d=d, d_out=d_out, degree=degree, ns=ns, seed=seed
-                    )
-                sk.update(rows.astype(np.float64))
-        if acc:
-            items = sorted(acc.items(), key=lambda kv: repr(kv[0]))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([k for k, _ in items], key_arrow_type),
-                    pa.array([name] * len(items), pa.string()),
-                    pa.array([s.to_bytes() for _, s in items], pa.binary()),
-                ],
-                names=[key, "name", "state"],
-            )
-
-    partials = df.select(key, vec_col).mapInArrow(
-        partial, f"{key} {key_type}, name string, state binary"
-    )
-    return merge_keyed_states(partials, key, key_type)
+    params = {"d": d, "d_out": d_out, "degree": degree, "ns": ns, "seed": seed}
+    return sketch_by_key(df, key, [SketchSpec(name, "tensorsketch", vec_col, params)])

@@ -114,8 +114,8 @@ class Sketch:
 
     # Kinds whose update() consumes fixed-dimension VECTORS (one (n, d)
     # matrix per batch — tensorsketch) rather than a flat value stream.
-    # Generic feeders (e.g. the streaming state-store path) stack list
-    # columns row-wise for these instead of concatenating them flat.
+    # spark.agg.TaskFeed stacks their list columns row-wise instead of
+    # concatenating them flat.
     consumes_vectors: ClassVar[bool] = False
 
     # Whether a task body may count a column's small non-negative ids first

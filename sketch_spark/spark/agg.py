@@ -110,6 +110,32 @@ def _extract_kept(arr, want_float: bool) -> tuple[np.ndarray, np.ndarray | None]
     return v, kept
 
 
+def _batch_matrix(arr: pa.Array) -> np.ndarray:
+    """(n, d) matrix from an Arrow list column of fixed dimension d, in the
+    column's value dtype (zero-copy flatten; a ragged column raises)."""
+    lens = np.diff(arr.offsets.to_numpy(zero_copy_only=False))
+    d = int(lens[0]) if len(lens) else 0
+    if len(lens) and not (lens == d).all():
+        raise ValueError("ragged embedding column")
+    flat = arr.flatten().to_numpy(zero_copy_only=False)
+    return flat.reshape(-1, d) if d else flat.reshape(0, 0)
+
+
+def _extract_rows(arr) -> tuple[np.ndarray, np.ndarray | None]:
+    """:func:`_extract_kept` for a vector spec (``Sketch.consumes_vectors``):
+    a fixed-dimension list column as an (n, d) float64 matrix, one row per
+    non-null row, and the mask of the rows kept (None when none was null)."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    kept = None
+    if arr.null_count:
+        kept = arr.is_valid().to_numpy(zero_copy_only=False)
+        arr = arr.drop_null()
+    if not len(arr):
+        return np.empty((0, 0)), kept
+    return _batch_matrix(arr).astype(np.float64, copy=False), kept
+
+
 def _extract_from_array(arr, want_float: bool) -> np.ndarray:
     """:func:`_extract_kept`'s values alone."""
     return _extract_kept(arr, want_float)[0]
@@ -277,18 +303,24 @@ def _segments(vals: np.ndarray, gid: np.ndarray | None, w: np.ndarray | None, n_
             yield g, vals[lo:hi], None if w is None else w[lo:hi]
 
 
+# TaskFeed column-key mode of a vector spec: one (n, d) matrix row per row.
+_ROWS = "rows"
+
+
 class TaskFeed:
-    """One task's sketches, fed unit by unit: the single task body of the
+    """One task's sketches, fed unit by unit: the only update loop of the
     global, grouped and weighted builds (DataFrame partitions, streaming
-    micro-batches, parquet-direct units). A global build has no ``keys``:
-    one group, key ``()``.
+    micro-batches and state-store triggers, parquet-direct units). A global
+    build has no ``keys``: one group, key ``()``.
 
     Per unit, keys are encoded once and each column is extracted and
     segmented by group once; a list column's tokens inherit their row's
-    group and weight. A segment that passes the dense gate is not fed yet
-    to the specs whose kind declares ``Sketch.preaggregate``: it goes into
-    one bincount accumulator per (column, key), within DENSE_CAP counters
-    per column across keys. Everything else — float/quantile and weighted
+    group and weight. A spec whose kind sets ``Sketch.consumes_vectors``
+    gets its column as an (n, d) float64 matrix, one row per row. A
+    segment that passes the dense gate is not fed yet to the specs whose
+    kind declares ``Sketch.preaggregate``: it goes into one bincount
+    accumulator per (column, key), within DENSE_CAP counters per column
+    across keys. Everything else — float/quantile, vector and weighted
     specs, undeclared kinds, segments past the gate or the budget — gets
     the raw stream in fixed UPDATE_SUPER slices: bounded transients, and a
     slicing that is a pure function of the unit, so the
@@ -309,34 +341,42 @@ class TaskFeed:
         self.key_types: list[pa.DataType] = []
         self.sketches: dict[tuple[tuple, str], Sketch] = {}
         self.n_values = dict.fromkeys(self.specs, 0)
-        # (col, want_float) -> (pre-aggregating spec names, raw-fed spec names)
-        self._columns: dict[tuple[str, bool], tuple[list[str], list[str]]] = {}
+        # (col, want_float) -> (pre-aggregating spec names, raw-fed spec names);
+        # a vector spec's column is keyed (col, _ROWS)
+        self._columns: dict[tuple[str, Any], tuple[list[str], list[str]]] = {}
         for s in specs:
-            pre, raw = self._columns.setdefault((s.col, s.is_quantile), ([], []))
+            how = _ROWS if _base._REGISTRY[s.kind].consumes_vectors else s.is_quantile
+            pre, raw = self._columns.setdefault((s.col, how), ([], []))
             (pre if weight_col is None and _preaggregates(s) else raw).append(s.name)
-        # (col, want_float) -> {key: accumulator}, and its counter total
-        self._counts: dict[tuple[str, bool], dict[tuple, np.ndarray]] = {}
+        # column key -> {key: accumulator}, and its counter total
+        self._counts: dict[tuple[str, Any], dict[tuple, np.ndarray]] = {}
         self._held = dict.fromkeys(self._columns, 0)
         # (column, key) pairs whose pre-aggregating sketches took raw segments
         self._raw_pre: set[tuple] = set()
 
     def feed(self, unit) -> None:
-        """Absorb one unit (an Arrow Table or RecordBatch)."""
+        """Absorb one unit (an Arrow Table or RecordBatch). A row with a null
+        weight is skipped, tokens and all."""
+        w = None
+        if self.weight_col is not None:
+            wcol = unit.column(self.weight_col)
+            if wcol.null_count:
+                unit = unit.filter(wcol.is_valid())
+                wcol = unit.column(self.weight_col)
+            w = np.asarray(wcol.to_numpy(zero_copy_only=False), np.float64)
         if self.keys:
             gid, groups, self.key_types = _encode_keys(unit, self.keys)
         else:
             gid, groups = None, [()]
-        w = None
-        if self.weight_col is not None:  # one per row, nulls kept (as NaN) for alignment
-            w = np.asarray(unit.column(self.weight_col).to_numpy(zero_copy_only=False), np.float64)
         for ck, (pre, raw) in self._columns.items():
-            arr = unit.column(unit.schema.get_field_index(ck[0]))
-            vals, kept = _extract_kept(arr, ck[1])
+            col, how = ck
+            arr = unit.column(unit.schema.get_field_index(col))
+            vals, kept = _extract_rows(arr) if how is _ROWS else _extract_kept(arr, how)
             for name in pre + raw:
                 self.n_values[name] += len(vals)
             g, wv = gid, w
             if len(groups) > 1 or w is not None:
-                if _is_list(arr.type):
+                if _is_list(arr.type) and how is not _ROWS:
                     lens = pc.list_value_length(arr).fill_null(0).to_numpy()
                     g = None if gid is None else np.repeat(gid, lens)
                     wv = None if w is None else np.repeat(w, lens)

@@ -25,9 +25,10 @@ reference's own tree combine is disabled as buggy, mpiParallelIO.cpp:83-84).
 
 Vocabulary pre-aggregation: every task body here — global, grouped and
 checkpointed — feeds one :class:`~sketch_spark.spark.agg.TaskFeed`, the
-same one the DataFrame and streaming builds use, and the grouped build
-feeds it whole unit tables. Each column is extracted and segmented by key
-once per unit. Segments whose ids all lie in [0, 2^22) (``agg.DENSE_CAP``)
+library's only update loop: the DataFrame builds, the foreachBatch
+streaming build and the two state-store streaming operators feed the
+same class, and the grouped build here feeds it whole unit tables. Each
+column is extracted and segmented by key once per unit. Segments whose ids all lie in [0, 2^22) (``agg.DENSE_CAP``)
 are added to one ``np.bincount`` accumulator per (column, key) — at most
 DENSE_CAP int64 counters (32 MB) per column per task across all keys.
 Every other segment, spec and kind — including the

@@ -14,40 +14,54 @@ This is the distributed, keyed generalization of the reference's
 streaming-mode HLL (`shllbase_t`, hll.h:1175-1269: estimate maintained
 while inserting). State-store persistence + checkpointing give exactly-once
 across restarts.
+
+A key's micro-batch goes back to Arrow and through a one-spec
+:class:`~sketch_spark.spark.agg.TaskFeed`, the batch builds' task body, so
+nulls, strings, token lists and vector kinds are read the same way as
+there. Two limits come from the pandas hand-over:
+
+- ``applyInPandasWithState`` hands a nullable int64 column over as
+  float64, so ids above 2^53 lose precision on this path.
+- ``pa.Table.from_pandas`` reads a NaN float as null, so these operators
+  skip it, while the batch builds still feed a NaN value.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from sketch_spark.sketches.base import from_bytes
-from sketch_spark.spark.agg import SketchSpec
+from sketch_spark.sketches.base import Sketch, from_bytes
+from sketch_spark.spark.agg import SketchSpec, TaskFeed
 
 
-def _values_from_pdf(pdf: pd.DataFrame, col: str, want_float: bool) -> np.ndarray:
-    s = pdf[col]
-    if len(s) and isinstance(s.iloc[0], (list, np.ndarray)):
-        vals = np.concatenate([np.asarray(x) for x in s]) if len(s) else np.empty(0)
-    else:
-        vals = s.to_numpy()
-    if want_float:
-        return np.asarray(vals, dtype=np.float64)
-    v = np.asarray(vals)
-    return v.astype(np.int64) if v.dtype.kind == "f" else v
+def _absorb(spec: SketchSpec, pdfs, state: GroupState) -> tuple[Sketch, int]:
+    """Feed one key's micro-batch through a one-spec TaskFeed and merge the
+    result into the key's stored sketch (used as is on its first trigger).
+    Returns the sketch and the key's running row count."""
+    feed = TaskFeed([spec])
+    n_rows = int(state.get[1]) if state.exists else 0
+    for pdf in pdfs:
+        n_rows += len(pdf)
+        feed.feed(pa.Table.from_pandas(pdf[[spec.col]], preserve_index=False))
+    sk = feed.finish()[((), spec.name)]
+    if state.exists:
+        sk = from_bytes(bytes(state.get[0])).merge(sk)
+    return sk, n_rows
 
 
-def _matrix_from_pdf(pdf: pd.DataFrame, col: str) -> np.ndarray:
-    """(n, d) float matrix from a list column — for vector-consuming kinds
-    (``Sketch.consumes_vectors``), which take one fixed-dimension vector
-    per ROW rather than a flat value stream."""
-    s = pdf[col]
-    if not len(s):
-        return np.empty((0, 0), dtype=np.float64)
-    return np.stack([np.asarray(x, dtype=np.float64) for x in s])
+def _estimate(sk: Sketch) -> float:
+    if hasattr(sk, "estimate"):
+        return float(sk.estimate())
+    if hasattr(sk, "cardinality_estimate"):
+        return float(sk.cardinality_estimate())
+    if hasattr(sk, "quantile"):
+        return float(np.atleast_1d(sk.quantile(0.5))[0])
+    return float("nan")
 
 
 def stateful_sketch_by_key(
@@ -60,47 +74,21 @@ def stateful_sketch_by_key(
     column is a full serialized sketch, so downstream consumers can merge
     or query it with the normal library functions.
     """
-    spec_tuple = (spec.kind, spec.col, dict(spec.params), spec.is_quantile)
 
     def update(key_tuple, pdfs, state: GroupState):
-        kind, col, params, want_float = spec_tuple
-        from sketch_spark.sketches.base import make_sketch
-
-        if state.exists:
-            sk = from_bytes(bytes(state.get[0]))
-            n_seen = int(state.get[1])
-        else:
-            sk = make_sketch(kind, **params)
-            n_seen = 0
-        as_vectors = getattr(type(sk), "consumes_vectors", False)
-        for pdf in pdfs:
-            if as_vectors:
-                vals = _matrix_from_pdf(pdf, col)
-            else:
-                vals = _values_from_pdf(pdf, col, want_float)
-            n_seen += len(pdf)
-            if len(vals):
-                sk.update(vals)
+        sk, n_rows = _absorb(spec, pdfs, state)
         blob = sk.to_bytes()
-        state.update((bytearray(blob), n_seen))
-        if hasattr(sk, "estimate"):
-            est = float(sk.estimate())
-        elif hasattr(sk, "cardinality_estimate"):
-            est = float(sk.cardinality_estimate())
-        elif hasattr(sk, "quantile"):
-            est = float(np.atleast_1d(sk.quantile(0.5))[0])
-        else:
-            est = float("nan")
+        state.update((bytearray(blob), n_rows))
         yield pd.DataFrame(
             {
                 "key": [str(key_tuple[0])],
                 "state": [blob],
-                "estimate": [est],
-                "n_rows": [n_seen],
+                "estimate": [_estimate(sk)],
+                "n_rows": [n_rows],
             }
         )
 
-    grouped = stream.select(F_col_str(key), spec.col).groupBy("__key")
+    grouped = stream.select(F.col(key).cast("string").alias("__key"), spec.col).groupBy("__key")
     return grouped.applyInPandasWithState(
         update,
         outputStructType="key string, state binary, estimate double, n_rows long",
@@ -108,9 +96,3 @@ def stateful_sketch_by_key(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def F_col_str(key: str):
-    from pyspark.sql import functions as F
-
-    return F.col(key).cast("string").alias("__key")

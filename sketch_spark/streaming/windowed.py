@@ -19,7 +19,6 @@ passes.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
@@ -27,19 +26,9 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from sketch_spark.sketches.base import from_bytes
 from sketch_spark.spark.agg import SketchSpec
-from sketch_spark.streaming.stateful import _values_from_pdf
+from sketch_spark.streaming.stateful import _absorb, _estimate
 
 OUTPUT_SCHEMA = "window_start string, status string, state binary, estimate double, n_rows long"
-
-
-def _estimate(sk) -> float:
-    if hasattr(sk, "estimate"):
-        return float(sk.estimate())
-    if hasattr(sk, "cardinality_estimate"):
-        return float(sk.cardinality_estimate())
-    if hasattr(sk, "quantile"):
-        return float(np.atleast_1d(sk.quantile(0.5))[0])
-    return float("nan")
 
 
 def windowed_sketch_stream(
@@ -55,7 +44,6 @@ def windowed_sketch_stream(
     the tumbling-window start (stringified UTC); state for a window is
     dropped (with a final emission) once the watermark passes its end.
     """
-    spec_tuple = (spec.kind, spec.col, dict(spec.params), spec.is_quantile)
     # The window-struct key arrives in the UDF as tz-NAIVE datetimes rendered
     # in the SESSION timezone; naive .timestamp() would re-interpret them in
     # the executor's SYSTEM timezone and shift the timeout (possibly behind
@@ -72,9 +60,6 @@ def windowed_sketch_stream(
     )
 
     def update(key_tuple, pdfs, state: GroupState):
-        kind, col, params, want_float = spec_tuple
-        from sketch_spark.sketches.base import make_sketch
-
         win_row = key_tuple[0]  # struct key: {start: datetime, end: datetime}
         start_dt = win_row["start"] if not hasattr(win_row, "start") else win_row.start
         end_dt = win_row["end"] if not hasattr(win_row, "end") else win_row.end
@@ -101,17 +86,7 @@ def windowed_sketch_stream(
                 }
             )
             return
-        if state.exists:
-            blob, n_seen = state.get
-            sk = from_bytes(bytes(blob))
-            n_seen = int(n_seen)
-        else:
-            sk = make_sketch(kind, **params)
-            n_seen = 0
-        for pdf in pdfs:
-            vals = _values_from_pdf(pdf, col, want_float)
-            n_seen += len(pdf)
-            sk.update(vals)
+        sk, n_seen = _absorb(spec, pdfs, state)
         blob = sk.to_bytes()
         state.update((bytearray(blob), n_seen))
         # finalize when the watermark passes this window's end

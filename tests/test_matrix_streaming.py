@@ -430,3 +430,96 @@ def test_streaming_states_roll_up_to_batch_global(spark, fixtures):
     assert len(glob) == 1
     whole = build_sketches(df, [spec])["h"]
     assert bytes(glob[0]["state"]) == whole.to_bytes()
+
+
+def _drain(out, tmp_path, key):
+    """Run a stateful streaming query to completion; the last row per
+    ``key`` value."""
+    sink = str(tmp_path / "sink")
+
+    def write(batch_df, batch_id):
+        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(sink)
+
+    q = (
+        out.writeStream.outputMode("update")
+        .foreachBatch(write)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    final = {}
+    for r in out.sparkSession.read.parquet(sink).collect():
+        if r[key] not in final or r["batch_id"] >= final[r[key]]["batch_id"]:
+            final[r[key]] = r
+    return final
+
+
+@pytest.mark.parametrize("col", ["word", "toks", "id"])
+def test_stateful_sketch_by_key_reads_columns_like_the_batch_build(spark, tmp_path, col):
+    """Strings, token lists with null elements and null rows, and int64
+    ids with nulls reach the state store through the batch builds'
+    TaskFeed: the drained per-key states equal sketch_by_key byte for
+    byte, every null skipped."""
+    from sketch_spark.streaming import stateful_sketch_by_key
+
+    rng = np.random.default_rng(3)
+    rows = []
+    for i in range(400):
+        toks = [None if rng.random() < 0.1 else int(x) for x in rng.integers(0, 500, rng.integers(0, 6))]
+        rows.append((
+            f"k{i % 3}",
+            None if i % 17 == 0 else f"w{rng.integers(0, 60)}",
+            None if i % 23 == 0 else toks,
+            None if i % 7 == 0 else int(rng.integers(0, 1 << 40)),
+        ))
+    schema = "k string, word string, toks array<bigint>, id bigint"
+    input_dir = str(tmp_path / "in")
+    spark.createDataFrame(rows, schema).repartition(6).write.parquet(input_dir)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "2").parquet(input_dir)
+    spec = SketchSpec("h", "hll", col, {"p": 12})
+    final = _drain(stateful_sketch_by_key(stream, "k", spec), tmp_path, "key")
+    assert max(r["batch_id"] for r in final.values()) >= 1
+    want = {
+        r["k"]: bytes(r["state"])
+        for r in sketch_by_key(spark.read.parquet(input_dir), "k", [spec]).collect()
+    }
+    assert {k: bytes(r["state"]) for k, r in final.items()} == want
+    assert sum(r["n_rows"] for r in final.values()) == len(rows)
+
+
+def test_windowed_sketch_stream_vector_kind_tensorsketch(spark, tmp_path):
+    """A vector kind through the windowed operator gets (n, d) row
+    matrices: each window's state matches a direct build over its rows
+    up to float summation order."""
+    import datetime as dt
+
+    from sketch_spark.sketches import from_bytes, make_sketch
+    from sketch_spark.streaming import windowed_sketch_stream
+
+    rng = np.random.default_rng(5)
+    n, d_in = 180, 4
+    day = rng.integers(0, 3, n)
+    vecs = rng.normal(size=(n, d_in)).round(3)
+    t0 = dt.datetime(2024, 3, 1)
+    rows = [
+        (t0 + dt.timedelta(days=int(dd), minutes=int(m)), [float(x) for x in v])
+        for dd, m, v in zip(day, rng.integers(0, 1440, n), vecs)
+    ]
+    schema = "ts timestamp, emb array<double>"
+    input_dir = str(tmp_path / "in")
+    spark.createDataFrame(rows, schema).repartition(4).write.parquet(input_dir)
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "2").parquet(input_dir)
+    params = {"d": d_in, "d_out": 64, "degree": 2, "ns": 2, "seed": 7}
+    spec = SketchSpec("ts", "tensorsketch", "emb", params)
+    # a watermark wider than the data: no row is late, every window stays open
+    out = windowed_sketch_stream(stream, "ts", spec, window="1 day", watermark="30 days")
+    latest = _drain(out, tmp_path, "window_start")
+    assert set(latest) == {f"2024-03-0{i + 1} 00:00:00" for i in range(3)}
+    for i in range(3):
+        r = latest[f"2024-03-0{i + 1} 00:00:00"]
+        want = make_sketch("tensorsketch", **params).update(vecs[day == i])
+        assert r["n_rows"] == int((day == i).sum())
+        np.testing.assert_allclose(
+            from_bytes(bytes(r["state"])).table, want.table, rtol=1e-9, atol=1e-12
+        )

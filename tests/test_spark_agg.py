@@ -605,3 +605,50 @@ def test_null_list_elements_and_rows_keep_groups_and_weights_aligned(spark):
     want_b = make_sketch("cms", l2sz=10, nh=3).update(np.array([3]), counts=np.array([2]))
     assert out["a"].to_bytes() == want_a.to_bytes()
     assert out["b"].to_bytes() == want_b.to_bytes()
+
+
+@pytest.mark.parametrize(
+    "values,non_null,total",
+    [([1, 2, 3], [1, 3], 3), ([[1, 2], [3], [4, 5]], [[1, 2], [4, 5]], 6)],
+    ids=["scalar", "list"],
+)
+def test_null_weight_skips_the_row(values, non_null, total):
+    """A row with a null weight is skipped with its tokens: the weighted
+    CMS equals a build over the other rows (a NaN weight reaching the
+    float cell sums would wrap the table's total to INT64_MIN + 3)."""
+    import pyarrow as pa
+
+    spec = SketchSpec("c", "cms", "v", {"l2sz": 10, "nh": 3})
+
+    def build(v, w):
+        feed = agg_mod.TaskFeed([spec], weight_col="w")
+        feed.feed(pa.table({"v": v, "w": pa.array(w, pa.float64())}))
+        return feed.finish()[((), "c")]
+
+    got = build(values, [1.0, None, 2.0])
+    assert got.total() == total
+    assert got.to_bytes() == build(non_null, [1.0, 2.0]).to_bytes()
+
+
+def test_vector_spec_gets_one_row_per_row():
+    """A ``consumes_vectors`` kind is fed (n, d) float64 rows, segmented by
+    key with their weights; a null row is skipped with its key and weight."""
+    import pyarrow as pa
+
+    params = {"d": 3, "d_out": 32, "degree": 2, "ns": 2, "seed": 5}
+    vecs = np.arange(15, dtype=np.float32).reshape(5, 3) / 7
+    rows = [list(map(float, v)) for v in vecs]
+    t = pa.table({
+        "k": ["a", "b", "a", "b", "a"],
+        "emb": pa.array(rows[:3] + [None] + rows[4:], pa.list_(pa.float32())),
+        "w": [1.0, 2.0, 3.0, 4.0, 5.0],
+    })
+    feed = agg_mod.TaskFeed([SketchSpec("ts", "tensorsketch", "emb", params)], ["k"], "w")
+    feed.feed(t)
+    got = feed.finish()
+    assert feed.n_values["ts"] == 4
+    X = vecs.astype(np.float64)
+    want_a = make_sketch("tensorsketch", **params).update(X[[0, 2, 4]], counts=[1.0, 3.0, 5.0])
+    want_b = make_sketch("tensorsketch", **params).update(X[[1]], counts=[2.0])
+    np.testing.assert_allclose(got[(("a",), "ts")].table, want_a.table, rtol=1e-12)
+    np.testing.assert_allclose(got[(("b",), "ts")].table, want_b.table, rtol=1e-12)
