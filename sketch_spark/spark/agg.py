@@ -307,6 +307,12 @@ def _segments(vals: np.ndarray, gid: np.ndarray | None, w: np.ndarray | None, n_
 _ROWS = "rows"
 
 
+def _column_key(spec: SketchSpec) -> tuple[str, Any]:
+    """How TaskFeed extracts ``spec``'s column: (col, _ROWS) for a vector
+    kind, else (col, want_float)."""
+    return spec.col, _ROWS if _base._REGISTRY[spec.kind].consumes_vectors else spec.is_quantile
+
+
 class TaskFeed:
     """One task's sketches, fed unit by unit: the only update loop of the
     global, grouped and weighted builds (DataFrame partitions, streaming
@@ -332,7 +338,12 @@ class TaskFeed:
     would have fed when :func:`_ships` says so, and feeds them otherwise.
     :meth:`finish` is :meth:`partial` followed by :func:`expand_partials`,
     which feeds the distinct ids once (with counts for additive kinds).
-    Both ends and both routes give the same final state bytes."""
+    Both ends and both routes give the same final state bytes.
+
+    :meth:`resume` continues a sketch that holds state already (the state
+    store's, in the streaming operators): later units update it in place,
+    which is not the same as merging a fresh sketch into it for every kind
+    (ws numbers occurrences from its own prior counts)."""
 
     def __init__(self, specs: list[SketchSpec], keys=(), weight_col: str | None = None):
         self.specs = {s.name: s for s in specs}
@@ -345,14 +356,15 @@ class TaskFeed:
         # a vector spec's column is keyed (col, _ROWS)
         self._columns: dict[tuple[str, Any], tuple[list[str], list[str]]] = {}
         for s in specs:
-            how = _ROWS if _base._REGISTRY[s.kind].consumes_vectors else s.is_quantile
-            pre, raw = self._columns.setdefault((s.col, how), ([], []))
+            pre, raw = self._columns.setdefault(_column_key(s), ([], []))
             (pre if weight_col is None and _preaggregates(s) else raw).append(s.name)
         # column key -> {key: accumulator}, and its counter total
         self._counts: dict[tuple[str, Any], dict[tuple, np.ndarray]] = {}
         self._held = dict.fromkeys(self._columns, 0)
-        # (column, key) pairs whose pre-aggregating sketches took raw segments
-        self._raw_pre: set[tuple] = set()
+        # (column, key) pairs whose pre-aggregating sketches hold state of
+        # their own (raw segments, or resumed): a shipped partial is fed into
+        # them, not put in their place
+        self._own_pre: set[tuple] = set()
 
     def feed(self, unit) -> None:
         """Absorb one unit (an Arrow Table or RecordBatch). A row with a null
@@ -395,7 +407,7 @@ class TaskFeed:
                 self._sketch(key, name)
             direct = raw
         elif pre:
-            self._raw_pre.add((ck, key))
+            self._own_pre.add((ck, key))
         step = _base.UPDATE_SUPER
         for name in direct:
             sk = self._sketch(key, name)
@@ -404,6 +416,14 @@ class TaskFeed:
                     sk.update(seg[s : s + step])
                 else:
                     sk.update(seg[s : s + step], counts=w[s : s + step])
+
+    def resume(self, key: tuple, name: str, sketch: Sketch) -> None:
+        """Make ``sketch`` the (key, name) sketch, which later units update
+        in place; a shipped partial is fed into it, never replaces it."""
+        self.sketches[(key, name)] = sketch
+        ck = _column_key(self.specs[name])
+        if name in self._columns[ck][0]:
+            self._own_pre.add((ck, key))
 
     def _sketch(self, key: tuple, name: str) -> Sketch:
         sk = self.sketches.get((key, name))
@@ -436,8 +456,8 @@ class TaskFeed:
         raw-fed sketch, plus one id→count partial per counted (column, key)
         under the name ``_PARTIAL + col`` where the size rule ships it. A
         shipped partial replaces its key's pre-aggregating sketches unless
-        raw segments fed them too. With no keys every other spec has a
-        state, fed or not."""
+        raw segments fed them too or one was resumed. With no keys every
+        other spec has a state, fed or not."""
         out, self.sketches = self.sketches, {}
         if not self.keys:  # every spec, in spec order
             out = {((), n): out[((), n)] if ((), n) in out else s.new() for n, s in self.specs.items()}
@@ -450,13 +470,13 @@ class TaskFeed:
                     for n in pre:
                         _feed_counted(out[(key, n)], part)
                     continue
-                if (ck, key) not in self._raw_pre:
+                if (ck, key) not in self._own_pre:
                     for n in pre:
                         del out[(key, n)]
                 out[(key, _PARTIAL + ck[0])] = part
         self._counts.clear()
         self._held = dict.fromkeys(self._columns, 0)
-        self._raw_pre.clear()
+        self._own_pre.clear()
         return out
 
     def finish(self) -> dict[tuple[tuple, str], Sketch]:

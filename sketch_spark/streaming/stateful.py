@@ -18,7 +18,10 @@ across restarts.
 A key's micro-batch goes back to Arrow and through a one-spec
 :class:`~sketch_spark.spark.agg.TaskFeed`, the batch builds' task body, so
 nulls, strings, token lists and vector kinds are read the same way as
-there. Two limits come from the pandas hand-over:
+there. The feed resumes the sketch restored from the state store and
+updates it in place, as further ``update`` calls would; merging a fresh
+sketch per trigger into it is not the same for every kind (ws numbers an
+item's occurrences from its prior count). Two limits come from the pandas hand-over:
 
 - ``applyInPandasWithState`` hands a nullable int64 column over as
   float64, so ids above 2^53 lose precision on this path.
@@ -40,18 +43,18 @@ from sketch_spark.spark.agg import SketchSpec, TaskFeed
 
 
 def _absorb(spec: SketchSpec, pdfs, state: GroupState) -> tuple[Sketch, int]:
-    """Feed one key's micro-batch through a one-spec TaskFeed and merge the
-    result into the key's stored sketch (used as is on its first trigger).
-    Returns the sketch and the key's running row count."""
+    """Feed one key's micro-batch through a one-spec TaskFeed that resumes
+    the key's stored sketch (a fresh one on its first trigger). Returns the
+    sketch and the key's running row count."""
     feed = TaskFeed([spec])
-    n_rows = int(state.get[1]) if state.exists else 0
+    n_rows = 0
+    if state.exists:
+        blob, n_rows = state.get
+        feed.resume((), spec.name, from_bytes(bytes(blob)))
     for pdf in pdfs:
         n_rows += len(pdf)
         feed.feed(pa.Table.from_pandas(pdf[[spec.col]], preserve_index=False))
-    sk = feed.finish()[((), spec.name)]
-    if state.exists:
-        sk = from_bytes(bytes(state.get[0])).merge(sk)
-    return sk, n_rows
+    return feed.finish()[((), spec.name)], int(n_rows)
 
 
 def _estimate(sk: Sketch) -> float:

@@ -488,6 +488,47 @@ def test_stateful_sketch_by_key_reads_columns_like_the_batch_build(spark, tmp_pa
     assert sum(r["n_rows"] for r in final.values()) == len(rows)
 
 
+@pytest.mark.parametrize(
+    "kind,params", [("ws", {"l2sz": 10, "nh": 3}), ("cms", {"l2sz": 10, "nh": 3})]
+)
+def test_stateful_sketch_by_key_continues_the_stored_sketch(spark, tmp_path, kind, params):
+    """Every item recurs in each of four triggers. Each trigger continues
+    the key's stored sketch, so the drained state equals one sketch
+    updated with all of the key's values: ws keeps numbering occurrences
+    from its prior counts (a fresh sketch merged in per trigger would
+    restart them at 1), and cms keeps its counts when the trigger's
+    id->count partial is small enough to ship."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sketch_spark.sketches import make_sketch
+    from sketch_spark.streaming import stateful_sketch_by_key
+
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    rng = np.random.default_rng(13)
+    vals = {"a": [], "b": []}
+    for i in range(4):
+        k = np.repeat(["a", "b"], 60)
+        v = np.concatenate([np.tile(np.arange(12), 5), np.tile(np.arange(6, 18), 5)])
+        perm = rng.permutation(len(v))
+        pq.write_table(pa.table({"k": k[perm], "v": v[perm]}), str(input_dir / f"part-{i}.parquet"))
+        for key in vals:
+            vals[key].append(v[k == key])
+    stream = (
+        spark.readStream.schema("k string, v bigint")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(input_dir))
+    )
+    spec = SketchSpec("s", kind, "v", params)
+    final = _drain(stateful_sketch_by_key(stream, "k", spec), tmp_path, "key")
+    assert max(r["batch_id"] for r in final.values()) == 3
+    for key, parts in vals.items():
+        want = make_sketch(kind, **params).update(np.concatenate(parts))
+        assert bytes(final[key]["state"]) == want.to_bytes(), key
+        assert final[key]["n_rows"] == 240
+
+
 def test_windowed_sketch_stream_vector_kind_tensorsketch(spark, tmp_path):
     """A vector kind through the windowed operator gets (n, d) row
     matrices: each window's state matches a direct build over its rows

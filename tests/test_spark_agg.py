@@ -652,3 +652,29 @@ def test_vector_spec_gets_one_row_per_row():
     want_b = make_sketch("tensorsketch", **params).update(X[[1]], counts=[2.0])
     np.testing.assert_allclose(got[(("a",), "ts")].table, want_a.table, rtol=1e-12)
     np.testing.assert_allclose(got[(("b",), "ts")].table, want_b.table, rtol=1e-12)
+
+
+@pytest.mark.parametrize("ships", [True, False], ids=["ships", "feeds"])
+@pytest.mark.parametrize(
+    "kind,params",
+    [("ws", {"l2sz": 10, "nh": 3}), ("cms", {"l2sz": 10, "nh": 3}), ("hll", {"p": 10})],
+)
+def test_resume_continues_the_sketch(monkeypatch, kind, params, ships):
+    """A resumed sketch is updated in place, so two feeds chained through
+    its bytes equal one sketch updated with both units. Merging a fresh
+    sketch into it instead restarts ws's occurrence numbering, and a
+    shipped id->count partial must not replace it."""
+    import pyarrow as pa
+
+    monkeypatch.setattr(agg_mod, "_ships", lambda part, fresh: ships)
+    rng = np.random.default_rng(9)
+    a, b = rng.integers(0, 40, 300), rng.integers(20, 60, 200)
+    spec = SketchSpec("s", kind, "v", params)
+    feed = agg_mod.TaskFeed([spec])
+    feed.feed(pa.table({"v": a}))
+    first = feed.finish()[((), "s")].to_bytes()
+    feed = agg_mod.TaskFeed([spec])
+    feed.resume((), "s", from_bytes(first))
+    feed.feed(pa.table({"v": b}))
+    got = feed.finish()[((), "s")]
+    assert got.to_bytes() == spec.new().update(a).update(b).to_bytes()
