@@ -11,8 +11,9 @@ objects (python/hll.cpp:3-69).
 
 All functions are Arrow-batched pandas UDFs (one Python invocation per
 batch of states, never per row) and operate on the self-describing binary
-state column produced by `partition_states` / `sketch_by_key` /
-checkpoint tables — any sketch kind, parameters ride with the state.
+state column of `sketch_by_key` / `rollup_states` / checkpoint tables —
+any sketch kind, parameters ride with the state. `partition_states` rows
+may hold an id→count partial: fold them with `tree_merge_states` first.
 UDF objects are built lazily (pandas_udf needs an active session).
 """
 

@@ -15,7 +15,7 @@ MPI job (/root/reference/include/sketch/mpiParallelIO.cpp):
 
 Everything per-row is NumPy over Arrow batches — no per-row Python
 (north-rule requirement). The partial-aggregate output is one tiny row per
-(partition × spec): (name, state BinaryType, n_rows, n_values, wall_ms), so
+(partition × state): (name, state BinaryType, n_rows, n_values, wall_ms), so
 the shuffle that follows moves kilobytes per partition regardless of input
 size. At 100 TB the scan dominates, which is exactly the profile you want.
 """
@@ -83,22 +83,28 @@ def _is_list(t: pa.DataType) -> bool:
 
 def _extract_kept(arr, want_float: bool) -> tuple[np.ndarray, np.ndarray | None]:
     """Flatten one Arrow array/chunked-array to a contiguous NumPy batch,
-    skipping nulls (Spark's ``approx_count_distinct`` semantics).
+    skipping nulls (Spark's ``approx_count_distinct`` semantics) and NaN,
+    as the streaming operators' pandas hand-over does.
 
     array<…> → flattened element values (a null row has none); string →
     FNV64+WangHash ids; numeric → direct (cast to float64 for quantile
     sketches, uint64 ids otherwise). Also returns the mask of the flattened
-    positions kept, or None when nothing was null (no pass over the data),
-    so a caller can drop the same positions from values it aligned to them.
+    positions kept, or None when none was dropped (no pass over a
+    non-float column), so a caller can drop the same positions from
+    values it aligned to them.
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     if _is_list(arr.type):
         arr = arr.flatten()
     kept = None
-    if arr.null_count:
-        kept = arr.is_valid().to_numpy(zero_copy_only=False)
-        arr = arr.drop_null()
+    if pa.types.is_floating(arr.type):
+        ok = pc.fill_null(pc.invert(pc.is_nan(arr)), False)
+    else:
+        ok = arr.is_valid() if arr.null_count else None
+    if ok is not None and ok.false_count:
+        kept = ok.to_numpy(zero_copy_only=False)
+        arr = arr.filter(ok)
     if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
         return hash_strings(arr.to_numpy(zero_copy_only=False)), kept
     vals = arr.to_numpy(zero_copy_only=False)
@@ -177,18 +183,15 @@ class _IdCounts(Sketch):
     ``_PARTIAL + col``. Sorted unique ``ids`` with their ``counts`` (int64
     in memory, the narrowest unsigned dtypes on the wire); merge sums counts
     over the union — a dense add while the largest id is below DENSE_CAP,
-    which every counted id is."""
+    which every counted id is. Its parameters name the specs it stands in
+    for, ``(name, kind, params)``: partials of different specs never merge."""
 
     kind = "_idcounts"
 
-    def __init__(self, ids=None, counts=None):
+    def __init__(self, ids=None, counts=None, specs=()):
         self.ids = np.zeros(0, np.int64) if ids is None else ids
         self.counts = np.zeros(0, np.int64) if counts is None else counts
-
-    @classmethod
-    def from_dense(cls, acc: np.ndarray) -> "_IdCounts":
-        ids = np.flatnonzero(acc)
-        return cls(ids, acc[ids])
+        self.specs = [[n, k, dict(p)] for n, k, p in specs]
 
     def update(self, values: np.ndarray, counts: np.ndarray | None = None) -> "_IdCounts":
         v = np.asarray(values).astype(np.int64)
@@ -197,7 +200,7 @@ class _IdCounts(Sketch):
         ids, inv = np.unique(v, return_inverse=True)
         c = np.zeros(len(ids), np.int64)
         np.add.at(c, inv, 1 if counts is None else np.asarray(counts).astype(np.int64))
-        return self.merge(_IdCounts(ids, c))
+        return self.merge(_IdCounts(ids, c, self.specs))
 
     def merge(self, other: "_IdCounts") -> "_IdCounts":
         self._check_mergeable(other)
@@ -217,7 +220,7 @@ class _IdCounts(Sketch):
         return self
 
     def _params(self) -> dict[str, Any]:
-        return {}
+        return {"specs": self.specs}
 
     def _arrays(self) -> dict[str, np.ndarray]:
         top_id = int(self.ids[-1]) if len(self.ids) else 0
@@ -229,7 +232,7 @@ class _IdCounts(Sketch):
 
     @classmethod
     def _from_state(cls, params, arrays) -> "_IdCounts":
-        return cls(arrays["ids"].astype(np.int64), arrays["counts"].astype(np.int64))
+        return cls(arrays["ids"].astype(np.int64), arrays["counts"].astype(np.int64), params["specs"])
 
 
 def _preaggregates(spec: SketchSpec) -> bool:
@@ -243,24 +246,22 @@ def _feed_counted(sk: Sketch, part: _IdCounts) -> Sketch:
     return sk.update(part.ids)
 
 
-def expand_partials(states: dict, specs: list[SketchSpec]) -> dict:
+def expand_partials(states: dict) -> dict:
     """Feed each id→count partial in ``states`` (``{(key, name): state}``)
-    once to its column's pre-aggregating specs — with counts for the
-    ``"counts"`` kinds — creating any sketch that no unit fed, and drop the
-    partial. The pre-aggregating kinds give the same bytes under any split
-    of their input, so this equals feeding each task's ids where they were
-    counted. Used by :meth:`TaskFeed.finish` in the task and by
-    :func:`~sketch_spark.spark.files.build_sketches_from_parquet` on the
-    merged partials."""
+    once to the specs it stands in for — with counts for the ``"counts"``
+    kinds — creating any sketch that no unit fed, and drop the partial;
+    other states pass through undecoded. The pre-aggregating kinds give the
+    same bytes under any split of their input, so this equals feeding each
+    task's ids where they were counted. The last fold of every build runs
+    it (:func:`tree_merge_states`, :func:`merge_keyed_states`)."""
     out = {k: v for k, v in states.items() if not k[1].startswith(_PARTIAL)}
     for (key, name), part in states.items():
         if not name.startswith(_PARTIAL):
             continue
         part = _as_sketch(part)
-        for s in specs:
-            if s.col == name[len(_PARTIAL):] and _preaggregates(s):
-                sk = out.get((key, s.name))
-                out[(key, s.name)] = _feed_counted(s.new() if sk is None else _as_sketch(sk), part)
+        for n, kind, params in part.specs:
+            sk = out.get((key, n))
+            out[(key, n)] = _feed_counted(make_sketch(kind, **params) if sk is None else _as_sketch(sk), part)
     return out
 
 
@@ -333,12 +334,10 @@ class TaskFeed:
     batch-boundary-dependent kinds (pccm/cbf/pcbf/vac/hk) stay
     byte-identical across re-runs and kill/resume.
 
-    Two ends. :meth:`partial` ships each (column, key) accumulator as one
+    One end: :meth:`partial` ships each (column, key) accumulator as one
     exact id→count partial (:class:`_IdCounts`) in place of the sketches it
-    would have fed when :func:`_ships` says so, and feeds them otherwise.
-    :meth:`finish` is :meth:`partial` followed by :func:`expand_partials`,
-    which feeds the distinct ids once (with counts for additive kinds).
-    Both ends and both routes give the same final state bytes.
+    would have fed when :func:`_ships` says so, and feeds them otherwise;
+    the build's last fold expands it. Both routes give the same bytes.
 
     :meth:`resume` continues a sketch that holds state already (the state
     store's, in the streaming operators): later units update it in place,
@@ -464,8 +463,10 @@ class TaskFeed:
         for ck, accs in self._counts.items():
             pre = self._columns[ck][0]
             fresh = [self.specs[n].new() for n in pre]
+            named = [(n, self.specs[n].kind, self.specs[n].params) for n in pre]
             for key, acc in accs.items():
-                part = _IdCounts.from_dense(acc)
+                ids = np.flatnonzero(acc)
+                part = _IdCounts(ids, acc[ids], named)
                 if not _ships(part, fresh):
                     for n in pre:
                         _feed_counted(out[(key, n)], part)
@@ -479,29 +480,23 @@ class TaskFeed:
         self._own_pre.clear()
         return out
 
-    def finish(self) -> dict[tuple[tuple, str], Sketch]:
-        """Feed the counted ids and return ``{(key, name): Sketch}``, leaving
-        the feed empty. With no keys every spec has a sketch, in spec order."""
-        out = expand_partials(self.partial(), list(self.specs.values()))
-        if not self.keys:
-            out = {((), n): out[((), n)] for n in self.specs}
-        return out
-
 
 def partition_states(
     df: DataFrame, specs: list[SketchSpec], weight_col: str | None = None
 ) -> DataFrame:
-    """Partial aggregation: one serialized sketch state per (partition, spec).
+    """Partial aggregation: one serialized state per (partition, state
+    name) — :meth:`TaskFeed.partial`'s, so a row may hold an id→count
+    partial; :func:`tree_merge_states` folds and expands them.
 
     ``weight_col`` (optional): a numeric per-row weight fed to every spec
     as ``update(values, counts=...)``; for list columns a row's weight
     applies to each of its tokens.
 
-    Also emits per-partition lineage/throughput metrics (rows, values,
-    wall ms) — the Spark analog of the reference's per-phase timers
-    (mpiParallelIO.cpp:91-99).
+    Also emits per-partition lineage/throughput metrics (rows, values of the
+    row's column, wall ms), the reference's per-phase timers
+    (mpiParallelIO.cpp:91-99); zero on a partial beside its specs' own
+    states, so a spec's and its partial's rows count each partition once.
     """
-    names = [s.name for s in specs]
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t0 = time.perf_counter()
@@ -510,15 +505,24 @@ def partition_states(
         for batch in batches:
             n_rows += batch.num_rows
             task.feed(batch)
-        sketches = task.finish()
+        states = {name: sk for (_, name), sk in task.partial().items()}
         wall_ms = (time.perf_counter() - t0) * 1e3
+
+        def metrics(name, sk):
+            if name.startswith(_PARTIAL):
+                if any(n in states for n, _, _ in sk.specs):
+                    return 0, 0, 0.0
+                name = sk.specs[0][0]
+            return n_rows, task.n_values[name], wall_ms
+
+        m = [metrics(n, sk) for n, sk in states.items()]
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(names, pa.string()),
-                pa.array([sketches[((), n)].to_bytes() for n in names], pa.binary()),
-                pa.array([n_rows] * len(names), pa.int64()),
-                pa.array([task.n_values[n] for n in names], pa.int64()),
-                pa.array([wall_ms] * len(names), pa.float64()),
+                pa.array(list(states), pa.string()),
+                pa.array([sk.to_bytes() for sk in states.values()], pa.binary()),
+                pa.array([r for r, _, _ in m], pa.int64()),
+                pa.array([v for _, v, _ in m], pa.int64()),
+                pa.array([t for _, _, t in m], pa.float64()),
             ],
             names=["name", "state", "n_rows", "n_values", "wall_ms"],
         )
@@ -573,7 +577,8 @@ def tree_merge_states(states: DataFrame | RDD) -> dict[str, Sketch]:
     Every partition is folded in place, then each level coalesces the
     partition count by :data:`TREE_FANOUT` and folds the co-located states
     again: the correct version of the reference's disabled binomial-tree
-    reduction (mpiParallelIO.cpp:301-345)."""
+    reduction (mpiParallelIO.cpp:301-345). The driver's fold, the last,
+    expands the id→count partials: the result holds only spec names."""
     rdd = states.select("name", "state").rdd if isinstance(states, DataFrame) else states
     nparts = max(1, rdd.getNumPartitions())
     rdd = rdd.mapPartitions(_fold_partition)
@@ -582,16 +587,19 @@ def tree_merge_states(states: DataFrame | RDD) -> dict[str, Sketch]:
         # shuffle=True: narrow coalesce would collapse the upstream partial-
         # aggregation stage to `nparts` tasks; the shuffle moves only states
         rdd = rdd.coalesce(nparts, shuffle=True).mapPartitions(_fold_partition)
-    return {name: _as_sketch(state) for name, state in fold_states(rdd.collect()).items()}
+    merged = {((), name): _as_sketch(state) for name, state in fold_states(rdd.collect()).items()}
+    return {name: sk for (_, name), sk in expand_partials(merged).items()}
+
+
+def _per_spec(merged: dict[str, Sketch], specs: list[SketchSpec]) -> dict[str, Sketch]:
+    """One sketch per spec, in spec order; empty where no task fed it."""
+    return {s.name: merged[s.name] if s.name in merged else s.new() for s in specs}
 
 
 def build_sketches(df: DataFrame, specs: list[SketchSpec]) -> dict[str, Sketch]:
     """scan → per-partition partial sketches → tree merge → {name: Sketch}.
     An empty input yields the identity (empty) sketch for every spec."""
-    out = tree_merge_states(partition_states(df, specs))
-    for s in specs:
-        out.setdefault(s.name, s.new())
-    return out
+    return _per_spec(tree_merge_states(partition_states(df, specs)), specs)
 
 
 def build_weighted_sketch(
@@ -612,8 +620,7 @@ def build_weighted_sketch(
     additive weights per feature first (one groupBy) when sum semantics are
     required."""
     spec = SketchSpec("w", kind, value_col, dict(params or {}))
-    out = tree_merge_states(partition_states(df, [spec], weight_col))
-    return out["w"] if "w" in out else spec.new()
+    return _per_spec(tree_merge_states(partition_states(df, [spec], weight_col)), [spec])["w"]
 
 
 def sketch_by_key(
@@ -626,11 +633,11 @@ def sketch_by_key(
     """Grouped sketches, two-phase (scales to high-cardinality keys).
 
     Phase 1 (map side): each partition feeds its Arrow batches to one keyed
-    :class:`TaskFeed`, vocabulary pre-aggregation per key included — the
-    partial aggregate. Phase 2 (one shuffle of tiny states): groupBy(key,
-    name) + applyInPandas merge. The shuffle moves |keys|×|specs| states
-    per partition, never raw rows — map-side combine done manually since
-    Spark has no Python UDAF with partial aggregation.
+    :class:`TaskFeed` and ships its ``partial()`` — the partial aggregate.
+    Phase 2 (one shuffle of tiny states): :func:`merge_keyed_states`. The
+    shuffle moves at most |keys|×|specs| states per partition, never raw
+    rows — map-side combine done manually since Spark has no Python UDAF
+    with partial aggregation.
 
     ``weight_col`` (optional): a numeric per-row weight fed through every
     spec's ``update(values, counts=...)`` — the grouped form of
@@ -656,12 +663,12 @@ def sketch_by_key(
     dtypes = dict(df.dtypes)
     key_types = [dtypes[k] for k in keys]
 
-    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _keyed_partial(batches, keys, specs, weight_col, flush_keys or FLUSH_KEYS)
-
     cols = sorted({s.col for s in specs} | set(keys) | ({weight_col} if weight_col else set()))
     key_schema = ", ".join(f"{k} {t}" for k, t in zip(keys, key_types))
-    partials = df.select(*cols).mapInArrow(partial, f"{key_schema}, name string, state binary")
+    partials = df.select(*cols).mapInArrow(
+        lambda batches: _keyed_partial(batches, keys, specs, weight_col, flush_keys or FLUSH_KEYS),
+        f"{key_schema}, name string, state binary",
+    )
 
     return merge_keyed_states(partials, keys, key_types)
 
@@ -724,10 +731,10 @@ def _keyed_partial(
 ) -> Iterator[pa.RecordBatch]:
     """Shared map-side combine for grouped builds: feed a stream of Arrow
     batches or tables to one keyed :class:`TaskFeed` and emit its
-    (keys..., name, state) partial batch at the end — and earlier whenever
-    it holds more than ``flush_keys`` sketches (bounded memory at any key
-    cardinality). Used by both the DataFrame path (:func:`sketch_by_key`)
-    and the parquet-direct path
+    ``partial()`` as a (keys..., name, state) batch at the end — and
+    earlier whenever it holds more than ``flush_keys`` sketches (bounded
+    memory at any key cardinality). Used by both the DataFrame path
+    (:func:`sketch_by_key`) and the parquet-direct path
     (:func:`sketch_spark.spark.files.sketch_by_key_from_parquet`)."""
 
     def emit(sketches):
@@ -741,31 +748,31 @@ def _keyed_partial(
     for unit in units:
         feed.feed(unit)
         if len(feed.sketches) > flush_keys:
-            yield emit(feed.finish())
+            yield emit(feed.partial())
     if feed.sketches:
-        yield emit(feed.finish())
+        yield emit(feed.partial())
 
 
 def merge_keyed_states(
     partials: DataFrame, key: str | list[str], key_type: str | list[str]
 ) -> DataFrame:
-    """Phase 2 of a grouped build: groupBy(keys, name) reduce-merge of the
-    (keys..., name, state) partials — one tiny shuffle of kilobyte states.
-    The output key columns keep their types (no silent stringification)."""
+    """Phase 2 of a grouped build, its last fold: one groupBy over the keys
+    alone folds each key's rows by name, expands its id→count partials and
+    emits one row per spec name, key types kept; a key with one state per
+    name and no partial passes through undecoded."""
     keys = [key] if isinstance(key, str) else list(key)
     key_types = [key_type] if isinstance(key_type, str) else list(key_type)
 
     def final_merge(pdf):
-        (state,) = fold_states((0, blob) for blob in pdf["state"]).values()
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["name"] = [pdf["name"].iloc[0]]
-        row["state"] = [_as_bytes(state)]
+        folded = fold_states((((), name), blob) for name, blob in zip(pdf["name"], pdf["state"]))
+        states = expand_partials(folded)
+        row = {k: [pdf[k].iloc[0]] * len(states) for k in keys}
+        row["name"] = [name for _, name in states]
+        row["state"] = [_as_bytes(st) for st in states.values()]
         return pd.DataFrame(row)
 
-    schema = ", ".join(
-        [f"{k} {t}" for k, t in zip(keys, key_types)] + ["name string", "state binary"]
-    )
-    return partials.groupBy(*keys, "name").applyInPandas(final_merge, schema)
+    schema = ", ".join([f"{k} {t}" for k, t in zip(keys, key_types)] + ["name string", "state binary"])
+    return partials.groupBy(*keys).applyInPandas(final_merge, schema)
 
 
 def rollup_states(states: DataFrame, keys: list[str]) -> DataFrame:
@@ -776,13 +783,13 @@ def rollup_states(states: DataFrame, keys: list[str]) -> DataFrame:
 
     ``states``: any (key columns..., name, state) DataFrame produced by
     :func:`sketch_by_key` / ``sketch_by_key_from_parquet`` / a checkpoint
-    table. ``keys``: the key columns to KEEP (may be empty — global merge
-    per spec name). Dropped key dimensions are merged away. For the
-    partitioning-invariant kinds the rolled-up state is byte-identical to
-    a direct build at the coarser granularity (the §5 merge invariant), so
-    rollup tables can be layered arbitrarily deep without error
-    accumulation — the reference's combine phase generalized from one
-    global merge to any lattice of groupings."""
+    table. ``keys``: the key columns to KEEP (may be empty — one global
+    group, merged per spec name). Dropped key dimensions are merged away.
+    For the partitioning-invariant kinds the rolled-up state is
+    byte-identical to a direct build at the coarser granularity (the §5
+    merge invariant), so rollup tables can be layered arbitrarily deep
+    without error accumulation — the reference's combine phase generalized
+    from one global merge to any lattice of groupings."""
     dtypes = dict(states.dtypes)
     missing = [c for c in (*keys, "name", "state") if c not in dtypes]
     if missing:

@@ -10,10 +10,12 @@ byte-identical to an uninterrupted run — the reference's serialization
 round-trip guarantee (testsrc/serial_test.cpp:25-39) lifted to job level.
 
 Each pending file is built by the parquet-direct task body
-(``files._build_states_for_units`` over one whole-file unit, fed through
+(``files._feed_units`` over one whole-file unit, fed through
 :class:`~sketch_spark.spark.agg.TaskFeed`), so its columns go parquet →
-Arrow → NumPy inside the task with no JVM row→Arrow exchange. Lineage keys
-are the absolute paths the driver lists, whatever form ``input_path`` was
+Arrow → NumPy inside the task with no JVM row→Arrow exchange, and
+expands its own id→count partials: ``lineage_report``, the SQL functions
+and ``rollup_states`` read the rows as finished sketches. Lineage keys are
+the absolute paths the driver lists, whatever form ``input_path`` was
 given in — so a re-run from a relative path finds its files done (and
 checkpoints whose keys came from Spark's absolute ``input_file_name()``
 still match). A checkpoint holds one spec set: resuming it with different
@@ -32,8 +34,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sketch_spark.sketches.base import Sketch
-from sketch_spark.spark.agg import SketchSpec, tree_merge_states
-from sketch_spark.spark.files import _build_states_for_units, _n_slices, list_parquet_files
+from sketch_spark.spark.agg import SketchSpec, expand_partials, tree_merge_states
+from sketch_spark.spark.files import _feed_units, _n_slices, list_parquet_files
 
 
 def checkpointed_build(
@@ -45,10 +47,9 @@ def checkpointed_build(
 ) -> dict[str, Sketch]:
     """Build global sketches over a parquet directory with per-file
     checkpointing; safe to kill and re-run. Each checkpoint row holds a
-    finished sketch (the task body's ``finish()``, counted ids already
-    fed): exactly one (file, name, state) row per file and spec, never an
-    id→count partial, so a checkpoint table reads like any keyed-states
-    table.
+    finished sketch: exactly one (file, name, state) row per file and
+    spec, never an id→count partial, so a checkpoint table reads like any
+    keyed-states table.
 
     ``fail_after_files`` injects a crash after K files for resume tests.
     """
@@ -73,8 +74,9 @@ def checkpointed_build(
     if todo:
         def task(files):
             for f in files:
-                for name, state in _build_states_for_units([(f, None, None)], specs):
-                    yield f, name, state
+                feed = _feed_units([(f, None, None)], specs)
+                for (_, name), sk in expand_partials(feed.partial()).items():
+                    yield f, name, sk.to_bytes()
 
         rows = spark.sparkContext.parallelize(todo, _n_slices(spark, len(todo))).mapPartitions(task)
         states = spark.createDataFrame(rows, "file string, name string, state binary")

@@ -25,30 +25,20 @@ reference's own tree combine is disabled as buggy, mpiParallelIO.cpp:83-84).
 
 Vocabulary pre-aggregation: every task body here — global, grouped and
 checkpointed — feeds one :class:`~sketch_spark.spark.agg.TaskFeed`, the
-library's only update loop: the DataFrame builds, the foreachBatch
-streaming build and the two state-store streaming operators feed the
-same class, and the grouped build here feeds it whole unit tables. Each
-column is extracted and segmented by key once per unit. Segments whose ids all lie in [0, 2^22) (``agg.DENSE_CAP``)
-are added to one ``np.bincount`` accumulator per (column, key) — at most
-DENSE_CAP int64 counters (32 MB) per column per task across all keys.
-Every other segment, spec and kind — including the
-batch-boundary-dependent pccm/cbf/pcbf/vac/hk — gets the raw stream.
-
-What a task does with its counted ids depends on its end. The global
-build's tasks end in ``TaskFeed.partial()``: each counted column ships as
-one exact id→count partial (sorted ids and counts at their narrowest
-dtypes) in place of the sketches whose kind declares
-``Sketch.preaggregate`` (hll/dhll/bloom/minhash by set, cms with counts),
-when the size rule says the partial is the cheaper state (see
-``TaskFeed.partial``). The partials sum in the same merge tree as every
-other state, and the driver feeds the merged distinct ids once to those
-sketches (``agg.expand_partials``). The checkpointed and grouped tasks end
-in ``finish()``, which feeds each task's distinct ids to its own sketches.
+library's only update loop, and ends in its ``partial()``. Segments whose
+ids all lie in [0, 2^22) (``agg.DENSE_CAP``) are bincounted per (column,
+key), within DENSE_CAP int64 counters per column per task; every other
+segment and kind — the batch-boundary-dependent pccm/cbf/pcbf/vac/hk
+included — gets the raw stream. A counted (column, key) ships as one
+exact id→count partial in place of the sketches whose kind declares
+``Sketch.preaggregate`` when that is the cheaper state. Partials sum in
+the same folds as every other state, and the last fold feeds the merged
+distinct ids once to those sketches (``agg.expand_partials``): the
+driver's fold of the global tree, or the keyed reducer. Only the
+checkpoint expands in the task, so each of its rows is a finished sketch.
 A tokenizer vocabulary that repeats 50 k ids millions of times is hashed
-and scattered 50 k times per sketch instead of once per token, and with a
-partial it is hashed once per job, not once per task. The pre-aggregating
-kinds give the same bytes under any split of their input, so every end
-and route gives byte-identical final states.
+once per job (or key) instead of once per token, and the pre-aggregating
+kinds give the same bytes under any split of their input.
 
 The DataFrame path (`sketch_spark.spark.agg`) remains the general route for
 sketching *derived* DataFrames (post-filter/join/column-expr); this module
@@ -69,7 +59,7 @@ from sketch_spark.spark.agg import (
     SketchSpec,
     TaskFeed,
     _keyed_partial,
-    expand_partials,
+    _per_spec,
     merge_keyed_states,
     tree_merge_states,
 )
@@ -107,7 +97,7 @@ def _feed_units(
 ) -> TaskFeed | None:
     """Task body: read the needed columns of each work unit and feed them
     to one :class:`~sketch_spark.spark.agg.TaskFeed`; None when there were
-    no units. The caller picks the end: ``partial()`` or ``finish()``."""
+    no units."""
     task = TaskFeed(specs)
     cols = sorted({s.col for s in specs} | set(extra_columns))
     any_unit = False
@@ -125,14 +115,13 @@ def _build_states_for_units(
     specs: list[SketchSpec],
     row_filter=None,
     extra_columns=(),
-    end=TaskFeed.finish,
 ) -> Iterator[tuple[str, bytes]]:
-    """The (name, state bytes) pairs of the fed task's ``end`` — one
-    finished state per spec by default, or :meth:`TaskFeed.partial`'s
-    states — and nothing when there were no units."""
+    """The (name, state bytes) pairs of the fed task's
+    :meth:`~sketch_spark.spark.agg.TaskFeed.partial`, and nothing when
+    there were no units."""
     task = _feed_units(units, specs, row_filter, extra_columns)
     if task is not None:
-        for (_, name), sk in end(task).items():
+        for (_, name), sk in task.partial().items():
             yield name, sk.to_bytes()
 
 
@@ -221,7 +210,8 @@ def sketch_by_key_from_parquet(
 
     Each task feeds its whole unit tables to one keyed
     :class:`~sketch_spark.spark.agg.TaskFeed`, which pre-aggregates dense
-    ids per (column, key) as the global builds do. States are
+    ids per (column, key) as the global builds do, and ships its
+    ``partial()``; the keyed reducer expands the partials. States are
     byte-identical to the DataFrame path for the partitioning-invariant
     kinds (hll/bloom/cms/minhash/…, the §5 merge invariant) —
     regression-tested; the batch-boundary-dependent kinds see one update
@@ -281,9 +271,7 @@ def sketch_by_key_from_parquet(
 
     unit_rows = spark.sparkContext.parallelize(units, _n_slices(spark, len(units)))
     units_df = spark.createDataFrame(unit_rows, "path string, rg_lo int, rg_hi int")
-    schema = ", ".join(
-        [f"{k} {t}" for k, t in zip(keys, key_types)] + ["name string", "state binary"]
-    )
+    schema = ", ".join([f"{k} {t}" for k, t in zip(keys, key_types)] + ["name string", "state binary"])
     partials = units_df.mapInArrow(task, schema)
     return merge_keyed_states(partials, keys, key_types)
 
@@ -304,9 +292,10 @@ def build_sketches_from_parquet(
     exact id→count partial in place of the pre-aggregating sketches when
     that is smaller. The states go through the merge tree of
     :func:`~sketch_spark.spark.agg.tree_merge_states`, the partials summing
-    like any other state, and the driver feeds the merged counts once to
-    their columns' specs (:func:`~sketch_spark.spark.agg.expand_partials`).
-    Returns one sketch per spec name, byte-identical to a finished build.
+    like any other state, and its driver fold feeds the merged counts once
+    to the specs they stand in for. Returns one sketch per spec name, in
+    spec order, byte-identical to a build that fed every task's ids in the
+    task.
 
     ``row_filter``: optional ``pa.Table -> pa.Table`` applied per unit (the
     pushdown hook for simple predicates; must be deterministic).
@@ -317,8 +306,6 @@ def build_sketches_from_parquet(
     # fewer files than cores → row-group splitting keeps the scan full-width
     units = _plan_units(files, spark.sparkContext.defaultParallelism)
     pairs = spark.sparkContext.parallelize(units, _n_slices(spark, len(units))).mapPartitions(
-        lambda part: _build_states_for_units(part, specs, row_filter, extra_columns, TaskFeed.partial)
+        lambda part: _build_states_for_units(part, specs, row_filter, extra_columns)
     )
-    merged = tree_merge_states(pairs)
-    out = expand_partials({((), n): st for n, st in merged.items()}, specs)
-    return {s.name: out[((), s.name)] if ((), s.name) in out else s.new() for s in specs}
+    return _per_spec(tree_merge_states(pairs), specs)

@@ -25,8 +25,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sketch_spark.sketches.base import Sketch
 from sketch_spark.spark.agg import (
+    _PARTIAL,
     SketchSpec,
     _as_sketch,
+    _preaggregates,
     fold_states,
     partition_states,
     tree_merge_states,
@@ -111,12 +113,13 @@ class StreamingSketchBuild:
 
     def progress(self) -> DataFrame:
         """Per-batch lineage: rows/values/wall-ms absorbed by each micro-batch.
-        (n_rows repeats per spec in the state rows, so row totals come from
-        one spec's rows only.)"""
+        (n_rows repeats per state in the state rows, so row totals come from
+        the first spec's rows and its column's partial rows.)"""
         states = self.spark.read.option("basePath", self.states_dir).parquet(self.states_dir)
-        first_name = self.specs[0].name
+        first_name, col = self.specs[0].name, self.specs[0].col
+        names = [first_name] + ([_PARTIAL + col] if _preaggregates(self.specs[0]) else [])
         return (
-            states.where(F.col("name") == first_name)
+            states.where(F.col("name").isin(names))
             .groupBy("batch_id")
             .agg(
                 F.sum("n_rows").alias("rows"),

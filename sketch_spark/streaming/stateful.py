@@ -21,12 +21,9 @@ nulls, strings, token lists and vector kinds are read the same way as
 there. The feed resumes the sketch restored from the state store and
 updates it in place, as further ``update`` calls would; merging a fresh
 sketch per trigger into it is not the same for every kind (ws numbers an
-item's occurrences from its prior count). Two limits come from the pandas hand-over:
-
-- ``applyInPandasWithState`` hands a nullable int64 column over as
-  float64, so ids above 2^53 lose precision on this path.
-- ``pa.Table.from_pandas`` reads a NaN float as null, so these operators
-  skip it, while the batch builds still feed a NaN value.
+item's occurrences from its prior count). One limit comes from the
+pandas hand-over: ``applyInPandasWithState`` hands a nullable int64 column
+over as float64, so ids above 2^53 lose precision on this path.
 """
 
 from __future__ import annotations
@@ -39,13 +36,14 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from sketch_spark.sketches.base import Sketch, from_bytes
-from sketch_spark.spark.agg import SketchSpec, TaskFeed
+from sketch_spark.spark.agg import SketchSpec, TaskFeed, expand_partials
 
 
 def _absorb(spec: SketchSpec, pdfs, state: GroupState) -> tuple[Sketch, int]:
     """Feed one key's micro-batch through a one-spec TaskFeed that resumes
-    the key's stored sketch (a fresh one on its first trigger). Returns the
-    sketch and the key's running row count."""
+    the key's stored sketch (a fresh one on its first trigger) and expand
+    its partial: the state store holds whole sketches. Returns the sketch
+    and the key's running row count."""
     feed = TaskFeed([spec])
     n_rows = 0
     if state.exists:
@@ -54,7 +52,7 @@ def _absorb(spec: SketchSpec, pdfs, state: GroupState) -> tuple[Sketch, int]:
     for pdf in pdfs:
         n_rows += len(pdf)
         feed.feed(pa.Table.from_pandas(pdf[[spec.col]], preserve_index=False))
-    return feed.finish()[((), spec.name)], int(n_rows)
+    return expand_partials(feed.partial())[((), spec.name)], int(n_rows)
 
 
 def _estimate(sk: Sketch) -> float:

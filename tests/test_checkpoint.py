@@ -9,7 +9,7 @@ import shutil
 import pyarrow.parquet as pq
 import pytest
 
-from sketch_spark.spark.agg import _PARTIAL, SketchSpec, TaskFeed
+from sketch_spark.spark.agg import _PARTIAL, SketchSpec
 from sketch_spark.spark.checkpoint import checkpointed_build, lineage_report
 from sketch_spark.spark.files import (
     _build_states_for_units,
@@ -122,7 +122,7 @@ def test_states_match_the_parquet_direct_build(spark, fixtures, ckpt_dir):
         files = list_parquet_files(input_path)
         # one parquet-direct task's share of the files
         share = [(f, None, None) for f in files[: len(files) // spark.sparkContext.defaultParallelism]]
-        shipped = {n for n, _ in _build_states_for_units(share, specs, end=TaskFeed.partial)}
+        shipped = {n for n, _ in _build_states_for_units(share, specs)}
         assert (_PARTIAL + "tokens" in shipped) == (table == "zipf")
         table_dir = os.path.join(ckpt_dir, table)
         ckpt = checkpointed_build(spark, input_path, specs, table_dir)

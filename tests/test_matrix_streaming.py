@@ -136,6 +136,25 @@ def test_stream_microbatches_and_progress(spark, fixtures, tmp_path):
     assert sum(r["rows"] for r in prog) == answers["n_docs"]
 
 
+def test_progress_counts_partitions_that_shipped_a_partial(spark, fixtures, tmp_path):
+    """On the zipf table the micro-batch tasks ship an id->count partial in
+    place of the first spec's sketch; progress() still counts every row
+    once, and the merged states expand it."""
+    from sketch_spark.spark.agg import _PARTIAL
+
+    d, answers = fixtures
+    specs = [
+        SketchSpec("h", "hll", "tokens", {"p": 14}),
+        SketchSpec("c", "cms", "tokens", {"l2sz": 16, "nh": 4}),
+    ]
+    b = StreamingSketchBuild(spark, specs, str(tmp_path / "s"))
+    b.start(os.path.join(d, "zipf"), max_files_per_trigger=8).awaitTermination()
+    names = {r["name"] for r in spark.read.parquet(b.states_dir).select("name").collect()}
+    assert _PARTIAL + "tokens" in names
+    assert sum(r["rows"] for r in b.progress().collect()) == answers["n_docs"]
+    assert b.current()["c"].total() == answers["zipf"]["n_tokens"]
+
+
 def test_stream_restart_is_idempotent(spark, fixtures, tmp_path):
     """Running the stream twice over the same checkpoint must not double
     count (second run sees no new files)."""

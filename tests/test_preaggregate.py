@@ -16,7 +16,7 @@ import pytest
 import sketch_spark.sketches  # noqa: F401  (registers every kind)
 import sketch_spark.sketches.base as base_mod
 from sketch_spark.sketches.base import _REGISTRY, from_bytes, make_sketch, merge_all
-from sketch_spark.spark import agg
+from sketch_spark.spark import agg, files
 from sketch_spark.spark.agg import (
     _PARTIAL,
     DENSE_CAP,
@@ -31,10 +31,13 @@ from sketch_spark.spark.agg import (
     build_sketches,
     expand_partials,
     fold_states,
+    partition_states,
     sketch_by_key,
+    tree_merge_states,
 )
 from sketch_spark.spark.files import (
     _build_states_for_units,
+    _feed_units,
     _read_unit,
     build_sketches_from_parquet,
     list_parquet_files,
@@ -152,27 +155,29 @@ def dense_spy(monkeypatch):
     return calls
 
 
-def _expanded(pairs, specs):
+def _expanded(pairs):
     """The driver's end of a parquet-direct build over (name, state) pairs:
-    fold, then feed the merged partials to their columns' specs."""
+    fold, then feed the merged partials to the specs they stand in for."""
     merged = {((), n): st for n, st in fold_states(pairs).items()}
-    return {name: _as_bytes(st) for (_, name), st in expand_partials(merged, specs).items()}
+    return {name: _as_bytes(st) for (_, name), st in expand_partials(merged).items()}
 
 
 def _check(units, dense_spy, specs=SPECS, row_filter=None):
-    """Both ends of the task body — finished states, and partials expanded
-    as the driver does — give the raw feed's bytes."""
-    pairs = list(_build_states_for_units(units, specs, row_filter))
+    """Both places a task's partials expand — in the task, as the
+    checkpoint does, and after the fold, as the driver does — give the raw
+    feed's bytes."""
+    finished = expand_partials(_feed_units(units, specs, row_filter).partial())
+    pairs = [(name, sk.to_bytes()) for (_, name), sk in finished.items()]
     states = dict(pairs)
     assert len(pairs) == len(states) == len(specs)  # one state per spec
     raw = _raw_states(units, specs, row_filter)
     assert states == raw
     counted = list(dense_spy)
-    partial = list(_build_states_for_units(units, specs, row_filter, end=TaskFeed.partial))
+    partial = list(_build_states_for_units(units, specs, row_filter))
     assert dense_spy[len(counted):] == counted  # the same units were counted
     del dense_spy[len(counted):]
     assert len(partial) == len(dict(partial))  # one state per name
-    assert _expanded(partial, specs) == raw
+    assert _expanded(partial) == raw
     return states
 
 
@@ -369,14 +374,14 @@ def test_both_routes_give_the_raw_bytes_for_every_preaggregate_kind(fixtures, ro
     tasks = [[(f, None, None) for f in files[t::3]] for t in range(3)]
     pairs = []
     for units in tasks:
-        shipped = list(_build_states_for_units(units, specs, end=TaskFeed.partial))
+        shipped = list(_build_states_for_units(units, specs))
         names = [n for n, _ in shipped]
         if route == "ship":
             assert names == ["k", _PARTIAL + "tokens"]
         else:
             assert names == [s.name for s in specs]
         pairs += shipped
-    got = _expanded(pairs, specs)
+    got = _expanded(pairs)
     assert sorted(got) == sorted(s.name for s in specs)
     # kll rides along raw-fed; its bytes depend on the task split
     local = _raw_states([u for units in tasks for u in units], GROUPED_SPECS)
@@ -391,10 +396,10 @@ def test_raw_fed_sketch_and_partial_ship_from_one_task(tmp_path, dense_spy):
     sparse = _write(tmp_path / "b.parquet", _docs(rng.integers(0, 2**40, 3_000)))
     units = [(dense, None, None), (sparse, None, None)]
     specs = [s for s in SPECS if s.name in ("h", "c", "b", "k")]
-    shipped = dict(_build_states_for_units(units, specs, end=TaskFeed.partial))
+    shipped = dict(_build_states_for_units(units, specs))
     assert sorted(shipped) == sorted(["h", "c", "b", "k", _PARTIAL + "tokens"])
     assert from_bytes(shipped["h"]).estimate() > 0  # the raw-fed part
-    assert _expanded(shipped.items(), specs) == _raw_states(units, specs)
+    assert _expanded(shipped.items()) == _raw_states(units, specs)
     assert len(dense_spy) == 1
 
 
@@ -466,13 +471,15 @@ def _per_key_states(path, key, specs):
 
 
 def _grouped_states(batches, key):
+    """{(key, name): state bytes} of a grouped task's batches, each key's
+    id->count partial expanded as the keyed reducer does."""
     out = {}
     for b in batches:
         d = b.to_pydict()
         for k, name, state in zip(d[key], d["name"], d["state"]):
-            assert (k, name) not in out
-            out[(k, name)] = bytes(state)
-    return out
+            assert ((k,), name) not in out
+            out[((k,), name)] = bytes(state)
+    return {(k, name): _as_bytes(st) for ((k,), name), st in expand_partials(out).items()}
 
 
 @pytest.fixture
@@ -535,3 +542,66 @@ def test_grouped_builds_match_per_key_builds(spark, fixtures, key):
     via_files = sketch_by_key_from_parquet(spark, path, key, GROUPED_SPECS)
     for out in (via_df, via_files):
         assert {(r[key], r["name"]): bytes(r["state"]) for r in out.collect()} == want
+
+
+# ---- one end: every build ships partials, the last fold expands them --------
+
+# fresh tables (2 MB of CMS) far above 16 B per distinct zipf id of a task or
+# key, so the size rule ships the partial on every route
+SHIP_SPECS = [
+    SketchSpec("h", "hll", "tokens", {"p": 14}),
+    SketchSpec("c", "cms", "tokens", {"l2sz": 16, "nh": 4}),
+    SketchSpec("b", "bloom", "tokens", {"l2sz": 20, "nh": 3}),
+]
+
+
+def test_partition_states_ship_a_partial_the_tree_expands(spark, fixtures):
+    path = os.path.join(fixtures[0], "zipf")
+    states = partition_states(spark.read.parquet(path), SHIP_SPECS)
+    assert _PARTIAL + "tokens" in {r["name"] for r in states.select("name").collect()}
+    out = tree_merge_states(states)
+    assert sorted(out) == sorted(s.name for s in SHIP_SPECS)
+    local = _raw_states([(f, None, None) for f in list_parquet_files(path)], SHIP_SPECS)
+    assert {n: sk.to_bytes() for n, sk in out.items()} == local
+
+
+@pytest.mark.parametrize("route", ["dataframe", "parquet"])
+def test_grouped_builds_ship_partials_the_reducer_expands(spark, fixtures, monkeypatch, route):
+    """Phase 1 ships a partial per key; the keyed reducer's output holds
+    exactly keys x specs rows, no reserved name, each the per-key direct
+    bytes."""
+    path = os.path.join(fixtures[0], "zipf")
+    phase1 = []
+    real = agg.merge_keyed_states
+
+    def spy(partials, *args):
+        phase1.append(partials)
+        return real(partials, *args)
+
+    monkeypatch.setattr(agg, "merge_keyed_states", spy)
+    monkeypatch.setattr(files, "merge_keyed_states", spy)
+    if route == "dataframe":
+        out = sketch_by_key(spark.read.parquet(path), "source", SHIP_SPECS)
+    else:
+        out = sketch_by_key_from_parquet(spark, path, "source", SHIP_SPECS)
+    shipped = [r["name"] for r in phase1[0].select("name").collect()]
+    assert shipped.count(_PARTIAL + "tokens") >= 4  # at least one per source
+    rows = out.collect()
+    want = _per_key_states(path, "source", SHIP_SPECS)
+    assert len(rows) == len(want) == 4 * len(SHIP_SPECS)
+    assert not any(r["name"].startswith(_PARTIAL) for r in rows)
+    assert {(r["source"], r["name"]): bytes(r["state"]) for r in rows} == want
+
+
+def test_partial_names_the_specs_it_stands_in_for():
+    ids, counts = np.array([1, 5]), np.array([3, 1])
+    a = _IdCounts(ids, counts, [("h", "hll", {"p": 10})])
+    back = from_bytes(a.to_bytes())
+    assert back.specs == a.specs and back.copy().merge(a).counts.tolist() == [6, 2]
+    for other in ([("h", "hll", {"p": 12})], [("h", "hll", {"p": 10}), ("b", "bloom", {})], []):
+        with pytest.raises(ValueError, match="mismatch"):
+            a.copy().merge(_IdCounts(ids, counts, other))
+    # expanded from the partial alone: the spec's sketch, built from nothing
+    out = expand_partials({((), _PARTIAL + "v"): back, ((), "k"): b"left undecoded"})
+    assert out[((), "k")] == b"left undecoded"
+    assert out[((), "h")].to_bytes() == make_sketch("hll", p=10).update(ids).to_bytes()
